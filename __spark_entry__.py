@@ -371,21 +371,6 @@ def q_pair_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pair_jw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2/P4: Jaro-Winkler pandas-UDF kernel vs DuckDB's built-in."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.substring(F.lower(F.trim("text")), 1, 20).alias("prefix")
-    )
-    pairs = q_candidate_pairs(spark, sf_dir)
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("prefix").alias("pa"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("prefix").alias("pb"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(_JW("pa", "pb"), 6).alias("jw_score"))
-    )
-
-
 _DL = F.pandas_udf(
     lambda a, b: SIM.batch_edit_score(a, b, damerau=True), DoubleType()
 )
@@ -457,24 +442,6 @@ def q_soft_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = q_candidate_pairs(spark, sf_dir)
     return soft_tfidf_pairs(pairs, d, id_col="doc_id", tokens_col="toks")
-
-
-def q_pair_dl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1: unrestricted Damerau-Levenshtein normalized score (the
-    reference's nid_score kernel, matching.py:263-270) vs DuckDB's
-    damerau_levenshtein — pins the DL kernel to an oracle, not just
-    unit tests."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.substring(F.lower(F.trim("text")), 1, 16).alias("prefix")
-    )
-    pairs = q_candidate_pairs(spark, sf_dir)
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("prefix").alias("pa"))
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("prefix").alias("pb"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", F.round(_DL("pa", "pb"), 6).alias("dl_score"))
-    )
 
 
 def _cascade_feats(feats: DataFrame) -> DataFrame:
@@ -677,6 +644,8 @@ def q_fs_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpersisted one-pass variant measured SLOWER in interleaved A/B —
     the persist costs nothing on a single traversal and keeps the
     helper semantics identical across the F-S family)."""
+    # the sweep runs per pattern, so the truth must be pattern-determined
+    assert "g_source" in _FS_FIELDS
     pat = FS.scored_pattern_counts(
         _fs_flagged(spark, sf_dir), _FS_FIELDS, iters=_FS_ITERS
     )
@@ -1734,40 +1703,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs at max_hamming=2 — inside the Manku
-    block-pair recall GUARANTEE (<=2 corrupted bits leave an intact
-    block pair), so the output equals exact all-pairs hamming<=2. The
-    md5-based token hash (functions/minhash.py:_token_hash64) is
-    DuckDB md5_number_lower, so the oracle recomputes the full simhash
-    in SQL."""
-    d = _docs(spark, sf_dir)
-    out = D.simhash_near_dup_pairs(
-        d, "doc_id", "text", max_hamming=2, token_hash="md5"
-    )
-    return out.select(
-        F.col("id_a").cast("long"), F.col("id_b").cast("long"), "hamming"
-    )
-
-
-def q_dedup_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION simhash near-dup path: identical plan to
-    q_dedup_simhash but with the vectorized SipHash token hash
-    (token_hash='fast') instead of the md5 oracle twin — the form a
-    10^12-doc deployment runs. SipHash is not expressible in DuckDB,
-    but it IS deterministic: the oracle embeds the corpus's fixed
-    31-token vocabulary with precomputed hash constants as a literal
-    VALUES table and recomputes simhash + hamming in SQL — a full
-    rows+schema+hash check of the production path."""
-    d = _docs(spark, sf_dir)
-    out = D.simhash_near_dup_pairs(
-        d, "doc_id", "text", max_hamming=2, token_hash="fast"
-    )
-    return out.select(
-        F.col("id_a").cast("long"), F.col("id_b").cast("long"), "hamming"
-    )
-
-
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for the first 8 vectors (rank output —
     integer-stable across engines)."""
@@ -1837,38 +1772,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.col("id_a").cast("long"), F.col("id_b").cast("long"),
         F.round("cosine", 6).alias("cosine"),
-    )
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality features + token counts, all JVM-side."""
-    d = _docs(spark, sf_dir)
-    qf = T.quality_features(F.col("text"))
-    return d.select(
-        "doc_id",
-        qf["n_chars"].alias("n_chars_q"),
-        qf["n_tokens"].alias("n_tokens"),
-        F.round(qf["punct_ratio"], 6).alias("punct_ratio"),
-        F.round(qf["digit_ratio"], 6).alias("digit_ratio"),
-        F.round(qf["stopword_ratio"], 6).alias("stopword_ratio"),
-    )
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite 0-1 quality score (functions/text.py:quality_score) —
-    the deterministic linear blend, fully SQL-reproducible."""
-    d = _docs(spark, sf_dir)
-    return d.select("doc_id", T.quality_score(F.col("text")).alias("quality"))
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting both ways: whitespace tokens + the BPE-ish
-    word-chunk/punctuation estimator (functions/text.py)."""
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        T.token_count(F.col("text")).alias("ws_tokens"),
-        T.word_token_count(F.col("text")).alias("word_tokens"),
     )
 
 
@@ -1969,627 +1872,11 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG decode path END-TO-END with a hard oracle: build a REAL
-    baseline JPEG (functions/jpeg.py encoder: DCT, quantization,
-    Huffman entropy coding, byte stuffing) whose four 8x8 blocks are
-    constant grays taken from each document's first 4 ASCII bytes —
-    with the all-ones quant table, constant blocks decode BIT-EXACTLY
-    through the full bitstream (markers -> Huffman -> dequant -> IDCT).
-    The decoded 4x4 thumbnail quadrants therefore equal
-    ord(substr(text, q+1)) — directly expressible in SQL."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.jpeg import (
-        encode_jpeg_gray,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_jpeg(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            img[0:8, 0:8] = raw[0]
-            img[0:8, 8:16] = raw[1]
-            img[8:16, 0:8] = raw[2]
-            img[8:16, 8:16] = raw[3]
-            out.append(encode_jpeg_gray(img))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    jpeg_udf = F.pandas_udf(_to_jpeg, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        jpeg_udf(F.col("text")).alias("payload"),
-        F.lit("image/jpeg").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PROGRESSIVE (SOF2) JPEG decode path END-TO-END with a hard
-    oracle: same flat-quadrant construction as multimodal_jpeg but
-    encoded with the multi-scan progressive encoder (interleaved DC
-    first + refinement, AC spectral bands with EOB runs, successive-
-    approximation refinement). Constant blocks with the all-ones quant
-    table decode BIT-EXACTLY, so the same ord(substr) SQL twin holds —
-    proving the SOF2 scan machinery reconstructs the identical
-    coefficient store."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.jpeg import (
-        encode_jpeg_progressive,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_jpeg(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            img[0:8, 0:8] = raw[0]
-            img[0:8, 8:16] = raw[1]
-            img[8:16, 0:8] = raw[2]
-            img[8:16, 8:16] = raw[3]
-            out.append(encode_jpeg_progressive(img))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    jpeg_udf = F.pandas_udf(_to_jpeg, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        jpeg_udf(F.col("text")).alias("payload"),
-        F.lit("image/jpeg").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PNG decode path END-TO-END with a hard oracle: build a REAL PNG
-    (functions/png.py encoder) whose four 8x8 quadrants are constant
-    grays taken from each document's first 4 ASCII bytes, with the
-    per-row filter CYCLING through all five types (None/Sub/Up/
-    Average/Paeth) so the full unfilter path runs on every payload.
-    PNG is lossless, so the decoded 4x4 thumbnail quadrants equal
-    ord(substr(text, q+1)) exactly — same SQL twin as multimodal_jpeg."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.png import encode_png
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_png(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            img[0:8, 0:8] = raw[0]
-            img[0:8, 8:16] = raw[1]
-            img[8:16, 0:8] = raw[2]
-            img[8:16, 8:16] = raw[3]
-            out.append(encode_png(img, filter_type="cycle"))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    png_udf = F.pandas_udf(_to_png, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        png_udf(F.col("text")).alias("payload"),
-        F.lit("image/png").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF decode path END-TO-END with a hard oracle: build a REAL
-    INTERLACED GIF89a (functions/gif.py encoder: literal-only LZW with
-    clear re-spam, 4-pass interlace) whose four 8x8 quadrants are the
-    doc's first 4 ASCII bytes through an identity gray palette — LZW
-    is lossless, so the decoded 4x4 thumbnail quadrants equal
-    ord(substr(text, q+1)) exactly. Same SQL twin as jpeg/png."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.gif import encode_gif
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    pal = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-
-    def _to_gif(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            img[0:8, 0:8] = raw[0]
-            img[0:8, 8:16] = raw[1]
-            img[8:16, 0:8] = raw[2]
-            img[8:16, 8:16] = raw[3]
-            out.append(encode_gif(img, pal, interlace=True))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    gif_udf = F.pandas_udf(_to_gif, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        gif_udf(F.col("text")).alias("payload"),
-        F.lit("image/gif").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossless-WebP decode path END-TO-END with a hard oracle: build
-    a REAL VP8L bitstream (functions/webp.py: canonical prefix codes,
-    color cache, subtract-green + predictor transforms) whose four
-    8x8 quadrants are the doc's first 4 ASCII bytes. VP8L is
-    lossless, so the decoded 4x4 thumbnail quadrants equal
-    ord(substr(text, q+1)) exactly. Same SQL twin as jpeg/png/gif."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.webp import encode_webp
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_webp(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            # all 4 channels (incl. alpha) carry the byte so the
-            # channel-mean gray equals it exactly
-            img = np.zeros((16, 16, 4), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(
-                ((0, 0), (0, 8), (8, 0), (8, 8))
-            ):
-                img[ys : ys + 8, xs : xs + 8, :] = raw[q]
-            out.append(
-                encode_webp(
-                    img, cache_bits=3, subtract_green=True, predictor_mode=1
-                )
-            )
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    webp_udf = F.pandas_udf(_to_webp, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        webp_udf(F.col("text")).alias("payload"),
-        F.lit("image/webp").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_webp_lossy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOSSY VP8 decode path END-TO-END with a hard oracle: build a
-    REAL VP8 key-frame bitstream (functions/vp8.py: boolean arithmetic
-    coder, Y2/WHT DC pipeline, intra prediction, iDCT) whose four
-    16x16 macroblocks are flat grays from the doc's first 4 ASCII
-    bytes. Flat MBs quantize EXACTLY at qi=0 (the Y2 DC path divides
-    evenly: fdct DC = 8*res, fwht gain 8, y2_dc factor 8 | 64*res), so
-    the decoded luma equals the source byte per quadrant, and with
-    neutral chroma the RGB conversion is the SQL-expressible integer
-    map clamp((298*(g-16)+128)>>8) — tolerance-free end to end."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.vp8 import (
-        encode_webp_lossy,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_webp(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            y = np.zeros((32, 32), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(((0, 0), (0, 16), (16, 0), (16, 16))):
-                y[ys : ys + 16, xs : xs + 16] = raw[q]
-            out.append(encode_webp_lossy(y, qi=0, filter_level=0)[0])
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    webp_udf = F.pandas_udf(_to_webp, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        webp_udf(F.col("text")).alias("payload"),
-        F.lit("image/webp").alias("mime"),
-        F.lit(32).alias("width"),
-        F.lit(32).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TIFF decode path END-TO-END with a hard oracle: big-endian
-    LZW-compressed TIFF with horizontal predictor and 5-row strips,
-    quadrants = the doc's first 4 ASCII bytes (lossless -> same
-    ord(substr) twin as png/webp)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.tiff import encode_tiff
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_tiff(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                img[ys : ys + 8, xs : xs + 8] = raw[q]
-            out.append(
-                encode_tiff(
-                    img, compression=5, predictor=2, rows_per_strip=5,
-                    big_endian=True,
-                )
-            )
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    tiff_udf = F.pandas_udf(_to_tiff, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        tiff_udf(F.col("text")).alias("payload"),
-        F.lit("image/tiff").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BMP decode path END-TO-END: 8-bit palette DIB (bottom-up rows,
-    4-byte padding), quadrants = the doc's first 4 ASCII bytes via an
-    identity gray palette — lossless, same ord(substr) twin."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.bmp import encode_bmp
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-
-    def _to_bmp(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            img = np.zeros((16, 16), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                img[ys : ys + 8, xs : xs + 8] = raw[q]
-            out.append(encode_bmp(img, palette=pal))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    bmp_udf = F.pandas_udf(_to_bmp, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        bmp_udf(F.col("text")).alias("payload"),
-        F.lit("image/bmp").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return feats.select(
-        F.col("media_id").cast("long").alias("doc_id"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-    )
-
-
-def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video decode path END-TO-END with a hard oracle: build a REAL
-    MJPEG AVI (functions/avi.py: RIFF container around four baseline
-    JPEGs) whose frames are constant grays from the doc's first 4
-    ASCII bytes. Constant 8x8 blocks roundtrip the all-ones-quant
-    JPEG bit-exactly, so each per-frame mean feature equals
-    ord(substr(text, k+1)) after the *255 rescale."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.avi import (
-        encode_gray_video,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_avi(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            frames = np.stack(
-                [np.full((16, 16), b, dtype=np.uint8) for b in raw]
-            )
-            out.append(encode_gray_video(frames, fps=10))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    avi_udf = F.pandas_udf(_to_avi, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("video").alias("kind"),
-        avi_udf(F.col("text")).alias("payload"),
-        F.lit("video/x-msvideo").alias("mime"),
-        F.lit(16).alias("width"),
-        F.lit(16).alias("height"),
-        F.lit(400).alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return (
-        feats.select(
-            F.col("media_id").cast("long").alias("doc_id"),
-            F.posexplode(F.col("feature")).alias("k", "v"),
-        )
-        .where(F.col("k") < 4)
-        .select(
-            "doc_id", "k", F.round(F.col("v") * 255).cast("long").alias("pix")
-        )
-    )
-
-
-def q_multimodal_apng(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Animated-PNG decode path END-TO-END with a hard oracle: build a
-    REAL APNG (functions/png.py:encode_apng — acTL/fcTL/IDAT/fdAT,
-    every frame a genuine encode_png stream) whose 4 full-canvas RGB
-    frames are constant grays from the doc's first 4 ASCII bytes.
-    decode_apng returns RGBA (alpha 255), so each decoded frame mean
-    is exactly (3*b + 255) / 4 — binding the chunk walk, sequence
-    numbers, per-frame static-PNG decode, and compositing.  The
-    checked value is mean*4*255 = 3b + 255, an exact integer (the /4
-    form lands on .5 boundaries that float32 rounds differently)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.png import (
-        encode_apng,
-    )
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_apng(texts):
-        out = []
-        for t in texts:
-            raw = str(t).encode("utf-8")[:4]
-            frames = [np.full((8, 8, 3), b, dtype=np.uint8) for b in raw]
-            out.append(encode_apng(frames, delays_ms=[50] * 4))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    apng_udf = F.pandas_udf(_to_apng, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("video").alias("kind"),
-        apng_udf(F.col("text")).alias("payload"),
-        F.lit("image/apng").alias("mime"),
-        F.lit(8).alias("width"),
-        F.lit(8).alias("height"),
-        F.lit(200).alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return (
-        feats.select(
-            F.col("media_id").cast("long").alias("doc_id"),
-            F.posexplode(F.col("feature")).alias("k", "v"),
-        )
-        .where(F.col("k") < 4)
-        .select(
-            "doc_id", "k", F.round(F.col("v") * 1020).cast("long").alias("pix4")
-        )
-    )
-
-
-def q_multimodal_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio decode path END-TO-END with a hard oracle: build a REAL
-    8-bit PCM WAV (functions/wav.py) whose 16 samples are the doc's
-    first 16 ASCII bytes shifted by -80 (so signs mix), run it through
-    extract_media_features -> decode_wav -> audio_features, and check
-    the two SQL-expressible features: peak = max|b-80|/128 (an exact
-    dyadic rational, identical in float32 and float64) and
-    zero-crossing rate = sign-changes/15 (a 16-value rational set that
-    rounds identically at 6 decimals)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.wav import encode_wav
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_wav(texts):
-        out = []
-        for t in texts:
-            raw = np.frombuffer(
-                str(t).encode("utf-8")[:16], dtype=np.uint8
-            ).astype(np.int64)
-            out.append(encode_wav(raw + 48, sample_rate=8000, bits=8))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    wav_udf = F.pandas_udf(_to_wav, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 16)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        wav_udf(F.col("text")).alias("payload"),
-        F.lit("audio/wav").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(2).alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return (
-        feats.select(
-            F.col("media_id").cast("long").alias("doc_id"),
-            F.posexplode(F.col("feature")).alias("k", "v"),
-        )
-        .where(F.col("k").isin(1, 2))  # peak, zcr — the SQL-expressible pair
-        .select("doc_id", "k", F.round(F.col("v"), 6).alias("v"))
-    )
-
-
-def q_multimodal_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G.711 µ-law decode path END-TO-END with a hard oracle: the
-    doc's first 16 bytes ARE the companded stream (a format-7 WAV
-    whose data chunk is the raw text bytes), so the decoded samples
-    are exactly ULAW[byte]/32768 — and the ITU-T expansion formula
-    (complement, exponent/mantissa split, ((m<<3)+0x84)<<e - 0x84) is
-    plain integer SQL. Checks the same two exactly-representable
-    features as multimodal_wav: peak (15-bit dyadic rational) and
-    zero-crossing rate (n/15)."""
-    import struct as _s
-
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    def _to_g711(texts):
-        out = []
-        fmt = _s.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-        for t in texts:
-            raw = str(t).encode("utf-8")[:16]
-            body = (
-                b"WAVE"
-                + b"fmt " + _s.pack("<I", len(fmt)) + fmt
-                + b"data" + _s.pack("<I", len(raw)) + raw
-            )
-            out.append(b"RIFF" + _s.pack("<I", len(body)) + body)
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    g711_udf = F.pandas_udf(_to_g711, BinaryType())
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 16)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("audio").alias("kind"),
-        g711_udf(F.col("text")).alias("payload"),
-        F.lit("audio/wav").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(2).alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    return (
-        feats.select(
-            F.col("media_id").cast("long").alias("doc_id"),
-            F.posexplode(F.col("feature")).alias("k", "v"),
-        )
-        .where(F.col("k").isin(1, 2))
-        .select("doc_id", "k", F.round(F.col("v"), 6).alias("v"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # merged registry entries (round 5): the driver's correctness snapshot
 # covers ~50 queries per round, so same-shaped queries union under a
-# fmt/variant column — every operator keeps its hard oracle inside the
-# cap, and the multimodal work drops ~8x (each doc encodes in exactly
-# ONE format chosen by doc_id % n instead of every format).
+# variant column — every operator keeps its hard oracle inside the cap.
 # ---------------------------------------------------------------------------
-
-IMAGE_FORMATS = (
-    "jpeg", "jpeg_progressive", "png", "gif",
-    "webp", "webp_lossy", "tiff", "bmp", "qoi",
-)
 
 
 def q_norm_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2732,267 +2019,6 @@ def q_ann_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             q_ann_ivfpq(spark, sf_dir).withColumn("method", F.lit("ivfpq"))
         )
-    )
-
-
-def q_multimodal_image(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ALL NINE image codecs END-TO-END with one hard oracle: each doc
-    is encoded in exactly one format (doc_id % 9 — jpeg baseline,
-    progressive SOF2, PNG with cycling filters, interlaced GIF89a,
-    lossless VP8L WebP, lossy VP8 key frame, big-endian LZW TIFF with
-    predictor, palette BMP, QOI), quadrants = the doc's first 4 ASCII bytes,
-    decoded through the real extract_media_features path. Losslessness
-    (or the exact flat-block VP8 identity at qi=0) makes the thumbnail
-    quadrants equal ord(substr(text, q+1)) — with the BT.601 integer
-    map for the lossy branch — so the twin is a single CASE over
-    doc_id % 9. Per-format deep-dive constructions live in the
-    unregistered q_multimodal_<fmt> helpers + pytest suites."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.bmp import encode_bmp
-    from aml_entity_resolution_assignment_spark.functions.gif import encode_gif
-    from aml_entity_resolution_assignment_spark.functions.jpeg import (
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-    )
-    from aml_entity_resolution_assignment_spark.functions.png import encode_png
-    from aml_entity_resolution_assignment_spark.functions.qoi import encode_qoi
-    from aml_entity_resolution_assignment_spark.functions.tiff import encode_tiff
-    from aml_entity_resolution_assignment_spark.functions.vp8 import (
-        encode_webp_lossy,
-    )
-    from aml_entity_resolution_assignment_spark.functions.webp import encode_webp
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    pal = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-
-    def _encode(ids, texts):
-        out = []
-        for i, t in zip(ids, texts):
-            raw = str(t).encode("utf-8")[:4]
-            fmt = int(i) % 9
-            if fmt == 5:  # lossy VP8: 16x16 flat macroblocks, qi=0
-                y = np.zeros((32, 32), dtype=np.uint8)
-                for q, (ys, xs) in enumerate(
-                    ((0, 0), (0, 16), (16, 0), (16, 16))
-                ):
-                    y[ys : ys + 16, xs : xs + 16] = raw[q]
-                out.append(encode_webp_lossy(y, qi=0, filter_level=0)[0])
-                continue
-            if fmt == 4:  # VP8L carries the byte on all 4 channels
-                img4 = np.zeros((16, 16, 4), dtype=np.uint8)
-                for q, (ys, xs) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                    img4[ys : ys + 8, xs : xs + 8, :] = raw[q]
-                out.append(
-                    encode_webp(
-                        img4, cache_bits=3, subtract_green=True,
-                        predictor_mode=1,
-                    )
-                )
-                continue
-            img = np.zeros((16, 16), dtype=np.uint8)
-            for q, (ys, xs) in enumerate(((0, 0), (0, 8), (8, 0), (8, 8))):
-                img[ys : ys + 8, xs : xs + 8] = raw[q]
-            if fmt == 0:
-                out.append(encode_jpeg_gray(img))
-            elif fmt == 1:
-                out.append(encode_jpeg_progressive(img))
-            elif fmt == 2:
-                out.append(encode_png(img, filter_type="cycle"))
-            elif fmt == 3:
-                out.append(encode_gif(img, pal, interlace=True))
-            elif fmt == 6:
-                out.append(
-                    encode_tiff(
-                        img, compression=5, predictor=2, rows_per_strip=5,
-                        big_endian=True,
-                    )
-                )
-            elif fmt == 7:
-                out.append(encode_bmp(img, palette=pal))
-            else:  # QOI (functions/qoi.py), gray broadcast to RGB
-                out.append(encode_qoi(img))
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    enc_udf = F.pandas_udf(_encode, BinaryType())
-    fmt_i = F.pmod(F.col("doc_id"), F.lit(9))
-    mime = (
-        F.when(fmt_i.isin(0, 1), F.lit("image/jpeg"))
-        .when(fmt_i == 2, F.lit("image/png"))
-        .when(fmt_i == 3, F.lit("image/gif"))
-        .when(fmt_i.isin(4, 5), F.lit("image/webp"))
-        .when(fmt_i == 6, F.lit("image/tiff"))
-        .when(fmt_i == 7, F.lit("image/bmp"))
-        .otherwise(F.lit("image/qoi"))
-    )
-    dim = F.when(fmt_i == 5, F.lit(32)).otherwise(F.lit(16))
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 4)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("image").alias("kind"),
-        enc_udf(F.col("doc_id"), F.col("text")).alias("payload"),
-        mime.alias("mime"),
-        dim.alias("width"),
-        dim.alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    did = F.col("media_id").cast("long")
-    fmt_name = F.element_at(
-        F.array(*[F.lit(n) for n in IMAGE_FORMATS]),
-        (F.pmod(did, F.lit(9)) + 1).cast("int"),
-    )
-    return feats.select(
-        did.alias("doc_id"),
-        fmt_name.alias("fmt"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    ).select(
-        "doc_id", "fmt", "k",
-        F.round(F.col("v") * 255).cast("long").alias("pix"),
-    )
-
-
-def q_multimodal_av(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio + video decode paths END-TO-END with one hard oracle: each
-    doc becomes an MJPEG AVI (doc_id % 5 == 0, per-frame means =
-    source bytes), an 8-bit PCM WAV (== 1, peak/zcr exactly
-    SQL-expressible), a G.711 µ-law WAV (== 2, the ITU-T expansion in
-    integer SQL), a VP8-in-IVF video with TRUE INTER FRAMES (== 3):
-    frame 0 is a key frame, frames 1-3 are P-frames predicted from
-    'last' over flat planes — 1/3 via NEWMV sub-pel motion, 2 via
-    SPLITMV per-subblock motion (all four partition types across the
-    MBs); six-tap of a constant is the constant, and both residual
-    layouts (Y2/WHT for whole-MB, full-DC 4x4 for SPLITMV) divide
-    exactly at qi=0, so each decoded frame mean equals the source
-    byte — the same SQL twin as the AVI branch, binding MV entropy
-    decode + reference buffers + motion compensation + split
-    partition coding end-to-end. Round 5 adds FLAC (== 4): the same
-    samples as the WAV arm compressed with an LPC-order-4 subframe and
-    partitioned Rice residuals (functions/flac.py) — lossless, so the
-    WAV arm's exact peak/zcr SQL binds the whole FLAC decode: bit
-    reader, LPC prediction, Rice partitions, CRCs. Same constructions
-    as the unregistered q_multimodal_video/wav/g711 helpers and
-    tests/test_vp8_inter.py / tests/test_flac.py."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from aml_entity_resolution_assignment_spark.functions.avi import (
-        encode_gray_video,
-    )
-    from aml_entity_resolution_assignment_spark.functions import vp8 as V8
-    from aml_entity_resolution_assignment_spark.functions.flac import encode_flac
-    from aml_entity_resolution_assignment_spark.functions.wav import encode_wav
-    from aml_entity_resolution_assignment_spark.operators.multimodal import (
-        extract_media_features,
-    )
-    import struct as _s
-
-    # every inter frame uses real motion machinery, exact on flat
-    # planes: frames 1/3 NEWMV with a sub-pel MV; frame 2 SPLITMV with
-    # a different partition type per MB and per-partition sub-pel MVs
-    # (binds partition + sub_mv_ref coding and per-4x4 MC end-to-end)
-    _ivf_modes = {
-        f: {(r, c): {"mode": V8.NEWMV, "mv": (2 * f, -6)}
-            for r in range(2) for c in range(2)}
-        for f in (1, 3)
-    }
-    _ivf_modes[2] = {
-        (r, c): {
-            "mode": V8.SPLITMV,
-            "split": (r * 2 + c) % 4,
-            "mvs": [(2 * (i + 1), -6)
-                    for i in range(V8.MBSPLIT_COUNT[(r * 2 + c) % 4])],
-        }
-        for r in range(2) for c in range(2)
-    }
-
-    def _encode(ids, texts):
-        out = []
-        g711_fmt = _s.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-        for i, t in zip(ids, texts):
-            b = str(t).encode("utf-8")[:16]
-            fmt = int(i) % 5
-            if fmt == 0:
-                frames = np.stack(
-                    [np.full((16, 16), x, dtype=np.uint8) for x in b[:4]]
-                )
-                out.append(encode_gray_video(frames, fps=10))
-            elif fmt == 1:
-                raw = np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-                out.append(encode_wav(raw + 48, sample_rate=8000, bits=8))
-            elif fmt == 2:
-                body = (
-                    b"WAVE"
-                    + b"fmt " + _s.pack("<I", len(g711_fmt)) + g711_fmt
-                    + b"data" + _s.pack("<I", len(b)) + b
-                )
-                out.append(b"RIFF" + _s.pack("<I", len(body)) + body)
-            elif fmt == 3:
-                frames = [np.full((32, 32), x, dtype=np.uint8) for x in b[:4]]
-                ivf, _recs = V8.encode_vp8_video(
-                    frames, qi=0, mb_modes_per_frame=_ivf_modes
-                )
-                out.append(ivf)
-            else:
-                # same signed samples as the WAV arm's normalized
-                # waveform: (raw + 48) - 128 = raw - 80
-                raw = np.frombuffer(b, dtype=np.uint8).astype(np.int64) - 80
-                out.append(
-                    encode_flac(
-                        raw, rate=8000, bps=8, block_size=16,
-                        mode="lpc4", porder=1,
-                    )
-                )
-        return pd.Series(out, index=texts.index, dtype="object")
-
-    enc_udf = F.pandas_udf(_encode, BinaryType())
-    fmt_i = F.pmod(F.col("doc_id"), F.lit(5))
-    is_video = fmt_i.isin(0, 3)
-    d = _docs(spark, sf_dir).where(F.col("n_chars") >= 16)
-    media = d.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.when(is_video, F.lit("video")).otherwise(F.lit("audio")).alias(
-            "kind"
-        ),
-        enc_udf(F.col("doc_id"), F.col("text")).alias("payload"),
-        F.when(fmt_i == 0, F.lit("video/x-msvideo"))
-        .when(fmt_i == 3, F.lit("video/x-ivf"))
-        .when(fmt_i == 4, F.lit("audio/flac"))
-        .otherwise(F.lit("audio/wav"))
-        .alias("mime"),
-        F.when(is_video, F.lit(16)).cast("int").alias("width"),
-        F.when(is_video, F.lit(16)).cast("int").alias("height"),
-        F.when(is_video, F.lit(400)).otherwise(F.lit(2)).alias("duration_ms"),
-    )
-    feats = extract_media_features(media, deterministic_fake=False)
-    did = F.col("media_id").cast("long")
-    fmt_name = (
-        F.when(F.pmod(did, F.lit(5)) == 0, F.lit("video"))
-        .when(F.pmod(did, F.lit(5)) == 1, F.lit("wav"))
-        .when(F.pmod(did, F.lit(5)) == 2, F.lit("g711"))
-        .when(F.pmod(did, F.lit(5)) == 3, F.lit("vp8"))
-        .otherwise(F.lit("flac"))
-    )
-    exploded = feats.select(
-        did.alias("doc_id"),
-        fmt_name.alias("fmt"),
-        F.posexplode(F.col("feature")).alias("k", "v"),
-    )
-    video_fmt = F.col("fmt").isin("video", "vp8")
-    return exploded.where(
-        (video_fmt & (F.col("k") < 4))
-        | (~video_fmt & F.col("k").isin(1, 2))
-    ).select(
-        "doc_id", "fmt", "k",
-        F.when(video_fmt, F.round(F.col("v") * 255))
-        .otherwise(F.round(F.col("v"), 6))
-        .cast("double")
-        .alias("v"),
     )
 
 
@@ -3269,62 +2295,6 @@ def q_mp3_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mpeg_version",
         F.round("mean_bitrate_kbps", 6).alias("mean_bitrate_kbps"),
         "is_cbr",
-    )
-
-
-def q_audio_containers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AIFF + Sun AU containers END-TO-END with a hard oracle: each
-    doc's first 4 text bytes become PCM samples ((byte-128)*3),
-    encoded into a doc_id-cycled container/width (AIFF 16/24/32-bit
-    big-endian incl. the 80-bit extended sample rate, AU linear
-    16/24/32) and decoded back bit-exactly by functions/aiff.py; the
-    SQL twin recomputes every sample from the text bytes."""
-    import pandas as pd
-
-    def run(batches):
-        import numpy as np
-
-        from aml_entity_resolution_assignment_spark.functions.aiff import (
-            decode_aiff,
-            decode_au,
-            encode_aiff,
-            encode_au,
-        )
-
-        fmts = ["aiff16", "aiff24", "aiff32", "au16", "au24", "au32"]
-        for pdf in batches:
-            out = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                raw = str(text).encode("utf-8", "replace")[:4]
-                if len(raw) < 4:
-                    continue
-                s = (
-                    (np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                     - 128) * 3
-                )[:, None]
-                fmt = fmts[did % 6]
-                if fmt.startswith("aiff"):
-                    payload = encode_aiff(s, 8000 + did % 5, int(fmt[4:]))
-                    dec, rate, _bits = decode_aiff(payload)
-                else:
-                    enc = {"au16": 3, "au24": 4, "au32": 5}[fmt]
-                    payload = encode_au(s, 8000 + did % 5, enc)
-                    dec, rate, _bits = decode_au(payload)
-                assert rate == 8000 + did % 5
-                for k in range(4):
-                    out.append((did, fmt, k, int(dec[k, 0])))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "fmt", "k", "v"]
-            )
-
-    d = (
-        _docs(spark, sf_dir)
-        .where(F.col("n_chars") >= 4)
-        .select("doc_id", "text")
-    )
-    return d.mapInPandas(
-        run, schema="doc_id long, fmt string, k int, v long"
     )
 
 
@@ -5179,7 +4149,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "adamic_adar": q_adamic_adar,
         "transitivity_report": q_transitivity_report,
         "mutual_best": q_mutual_best,
-        "audio_containers": q_audio_containers,
         "pmi_collocations": q_pmi_collocations,
         "link_hits": q_link_hits,
         # --- out-of-window: cheap-first as before ---
@@ -5278,9 +4247,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hac_single": q_hac_single,
         "hac_complete": q_hac_complete,
         "multimodal_decode": q_multimodal_decode,
-        "multimodal_image": q_multimodal_image,
-        "multimodal_av": q_multimodal_av,
-        "multimodal_apng": q_multimodal_apng,
     }
 
 
@@ -7408,157 +6374,6 @@ def oracle_sql() -> dict[str, str]:
     where d.n_chars >= 64
     """
 
-    # thumbnail quadrants of the 4-block constant-gray JPEG: k = i*4+j,
-    # quadrant q = 2*(i>=2) + (j>=2), pixel = text byte q (1-indexed)
-    sql["multimodal_jpeg"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k, ord(substr(d.text, pos.p, 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    # progressive stream of the same flat image -> identical decode
-    sql["multimodal_jpeg_progressive"] = sql["multimodal_jpeg"]
-    # TIFF/BMP are lossless: same flat-quadrant twin
-    sql["multimodal_tiff"] = sql["multimodal_jpeg"]
-    sql["multimodal_bmp"] = sql["multimodal_jpeg"]
-
-    sql["multimodal_png"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k, ord(substr(d.text, pos.p, 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    sql["multimodal_gif"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k, ord(substr(d.text, pos.p, 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    sql["multimodal_webp"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k, ord(substr(d.text, pos.p, 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    # lossy VP8: decoded luma == source byte per flat quadrant (exact
-    # at qi=0), then the neutral-chroma BT.601 integer map to RGB
-    sql["multimodal_webp_lossy"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id, pos.k,
-           greatest(0, least(255,
-             (298 * (ord(substr(d.text, pos.p, 1)) - 16) + 128) // 256
-           )) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    sql["multimodal_video"] = """
-    with pos as (select unnest(generate_series(0, 3)) as k)
-    select d.doc_id, pos.k,
-           ord(substr(d.text, cast(pos.k + 1 as int), 1)) as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    # APNG video path (q_multimodal_apng): constant RGB frames decode
-    # to RGBA with alpha 255, so the frame mean is (3b + 255) / 4
-    sql["multimodal_apng"] = """
-    with pos as (select unnest(generate_series(0, 3)) as k)
-    select d.doc_id, pos.k,
-      cast(3 * ord(substr(d.text, cast(pos.k + 1 as int), 1)) + 255
-        as bigint) as pix4
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-
-    sql["multimodal_wav"] = """
-    with pos as (select unnest(range(1, 17)) as p),
-    s as (
-      select d.doc_id, pos.p,
-             (ord(substr(d.text, cast(pos.p as int), 1)) - 80) as v
-      from documents d, pos
-      where d.n_chars >= 16
-    ),
-    lagged as (
-      select doc_id, p, v,
-             lag(v) over (partition by doc_id order by p) as lagv
-      from s
-    ),
-    f as (
-      select doc_id,
-             max(abs(v)) / 128.0 as peak,
-             sum(case when p > 1 and (v < 0) != (lagv < 0)
-                 then 1 else 0 end) / 15.0 as zcr
-      from lagged group by doc_id
-    )
-    select doc_id, 1 as k, round(peak, 6) as v from f
-    union all
-    select doc_id, 2 as k, round(zcr, 6) as v from f
-    """
-
-    # ITU-T G.711 µ-law expansion in plain integer SQL
-    sql["multimodal_g711"] = """
-    with pos as (select unnest(range(1, 17)) as p),
-    s as (
-      select d.doc_id, pos.p,
-             xor(ord(substr(d.text, cast(pos.p as int), 1)), 255) as u
-      from documents d, pos
-      where d.n_chars >= 16
-    ),
-    v as (
-      select doc_id, p,
-        case when u >= 128
-             then -((((u % 16) * 8 + 132) * (1 << ((u // 16) % 8))) - 132)
-             else ((((u % 16) * 8 + 132) * (1 << ((u // 16) % 8))) - 132)
-        end as val
-      from s
-    ),
-    lagged as (
-      select doc_id, p, val,
-             lag(val) over (partition by doc_id order by p) as lv
-      from v
-    ),
-    f as (
-      select doc_id,
-             max(abs(val)) / 32768.0 as peak,
-             sum(case when p > 1 and (val < 0) != (lv < 0)
-                 then 1 else 0 end) / 15.0 as zcr
-      from lagged group by doc_id
-    )
-    select doc_id, 1 as k, round(peak, 6) as v from f
-    union all
-    select doc_id, 2 as k, round(zcr, 6) as v from f
-    """
-
     sql["cm_token_counts"] = """
     with tok as (
       select unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) as t
@@ -7757,18 +6572,6 @@ def oracle_sql() -> dict[str, str]:
     from cfg
     """
 
-    # audio_containers: every decoded sample equals (byte-128)*3
-    sql["audio_containers"] = """
-    with pos as (select unnest(generate_series(0, 3)) as k)
-    select d.doc_id,
-           ['aiff16','aiff24','aiff32','au16','au24','au32']
-             [(d.doc_id % 6) + 1] as fmt,
-           pos.k::int as k,
-           ((ord(substr(d.text, (pos.k + 1)::int, 1)) - 128) * 3)::bigint
-             as v
-    from documents d, pos
-    where d.n_chars >= 4
-    """
 
     sql["mp4_meta"] = """
     select doc_id,
@@ -8974,51 +7777,6 @@ def oracle_sql() -> dict[str, str]:
     union all
     select 'ivfpq' as method, * from ({sql["ann_topk"]})
     """
-    # one format per doc (doc_id % 8); lossless branches decode to the
-    # raw text byte, the lossy-VP8 branch applies the BT.601 integer map
-    sql["multimodal_image"] = """
-    with pos as (
-      select (i * 4 + j) as k,
-             (2 * (i // 2) + (j // 2) + 1) as p
-      from (select unnest(generate_series(0, 3)) as i),
-           (select unnest(generate_series(0, 3)) as j)
-    )
-    select d.doc_id,
-           case d.doc_id % 9
-             when 0 then 'jpeg' when 1 then 'jpeg_progressive'
-             when 2 then 'png' when 3 then 'gif' when 4 then 'webp'
-             when 5 then 'webp_lossy' when 6 then 'tiff'
-             when 7 then 'bmp' else 'qoi' end as fmt,
-           pos.k,
-           case when d.doc_id % 9 = 5
-                then greatest(0, least(255,
-                  (298 * (ord(substr(d.text, pos.p, 1)) - 16) + 128) // 256))
-                else ord(substr(d.text, pos.p, 1)) end as pix
-    from documents d, pos
-    where d.n_chars >= 4
-    """
-    # 'video' = MJPEG-AVI, 'vp8' = VP8-in-IVF with true inter frames;
-    # both decode each flat frame to its source byte exactly
-    sql["multimodal_av"] = f"""
-    with vpos as (select unnest(generate_series(0, 3)) as k)
-    select d.doc_id,
-           case d.doc_id % 5 when 0 then 'video' else 'vp8' end as fmt,
-           vpos.k,
-           cast(ord(substr(d.text, cast(vpos.k + 1 as int), 1)) as double) as v
-    from documents d, vpos
-    where d.n_chars >= 16 and d.doc_id % 5 in (0, 3)
-    union all
-    select doc_id, 'wav' as fmt, k, v
-    from ({sql["multimodal_wav"]}) where doc_id % 5 = 1
-    union all
-    select doc_id, 'g711' as fmt, k, v
-    from ({sql["multimodal_g711"]}) where doc_id % 5 = 2
-    union all
-    -- FLAC is lossless over the SAME samples as the WAV arm, so the
-    -- identical peak/zcr SQL binds the whole compressed decode path
-    select doc_id, 'flac' as fmt, k, v
-    from ({sql["multimodal_wav"]}) where doc_id % 5 = 4
-    """
     # --- mixture sampling: thresholds are EXACT integers computed by
     # the same expression the engine uses (sampling.threshold), inlined
     # into both predicates ---
@@ -9594,16 +8352,12 @@ def oracle_sql() -> dict[str, str]:
     from documents
     """
 
-    # drop the subsumed per-format/per-variant twins so oracle keys
-    # mirror queries() exactly
+    # drop the per-variant twins composed into the merged entries
+    # above so oracle keys mirror queries() exactly
     for k in (
         "norm_email_phone", "norm_dates", "norm_address",
         "dedup_ngram_jaccard", "dedup_ngram_capped", "dedup_simhash_fast",
         "ann_topk", "ann_ivf",
-        "multimodal_jpeg", "multimodal_jpeg_progressive", "multimodal_png",
-        "multimodal_gif", "multimodal_webp", "multimodal_webp_lossy",
-        "multimodal_tiff", "multimodal_bmp", "multimodal_video",
-        "multimodal_wav", "multimodal_g711",
     ):
         del sql[k]
 

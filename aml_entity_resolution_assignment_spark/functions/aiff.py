@@ -1,7 +1,7 @@
 """AIFF and Sun AU audio containers (pure struct + numpy).
 
 Completes the uncompressed-audio container set next to functions/
-wav.py (RIFF little-endian) and functions/flac.py: AIFF is the
+wav.py (RIFF little-endian): AIFF is the
 big-endian IFF form (Apple), AU the historical Unix format still
 common in archival crawls. Both decode to (samples int32 ndarray
 [n, ch], samplerate, bits); normalizing by 2**(bits-1) lands on

@@ -2,9 +2,7 @@
 
 Pure-stdlib implementation of the EXIF container (CIPA DC-008 /
 EXIF 2.3, which embeds a TIFF 6.0 structure inside a JPEG APP1
-segment marked `Exif\\0\\0`). The in-repo TIFF reader
-(functions/tiff.py:_read_ifd) only extracts the integer tag types a
-raster decode needs; EXIF additionally needs ASCII (type 2) and
+segment marked `Exif\\0\\0`). EXIF needs ASCII (type 2) and
 RATIONAL (type 5) values plus the Exif-private sub-IFD chain
 (tag 34665), so this module carries its own IFD walker.
 

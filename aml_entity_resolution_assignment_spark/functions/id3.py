@@ -17,7 +17,7 @@ Implemented from the public spec:
     index) — parsed as the fallback when no v2 tag exists
 
 `build_id3v2` / `build_id3v1` are the in-repo test encoders (the
-encoder-for-decoder pattern of functions/wav.py & friends).
+encoder-for-decoder pattern of functions/mp4.py).
 Malformed structure raises Id3Error; absent tags return None.
 """
 

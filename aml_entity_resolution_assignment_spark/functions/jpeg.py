@@ -1,27 +1,20 @@
-"""Baseline + progressive JPEG codec in pure numpy — no codec libraries.
+"""Baseline grayscale JPEG codec in pure numpy — no codec libraries.
 
-Closes the multimodal stub boundary for the dominant web image format
-(VERDICT r2 "what's missing" #1): `decode_jpeg` handles baseline
-sequential DCT JFIF streams (SOF0/1: 8-bit, Huffman, 1 or 3
-components, 4:4:4 / 4:2:2 / 4:2:0 subsampling, restart markers) AND —
-round 4 — progressive DCT (SOF2, ITU T.81 Annex G): multi-scan
-spectral selection, one-or-more-bit successive approximation with DC
-and AC refinement scans, EOB runs, interleaved DC / non-interleaved AC
-scan structure. Arithmetic coding and hierarchical/lossless (SOF3+)
-raise with a clear message. `encode_jpeg_gray` / `encode_jpeg_color` /
-`encode_jpeg_progressive` produce spec-compliant streams (used for
-deterministic test payloads and the multimodal oracles; any
-libjpeg-family tool can decode their output).
+`decode_jpeg` handles single-component baseline sequential DCT JFIF
+streams (SOF0/1: 8-bit, Huffman, restart markers); colour,
+progressive (SOF2), arithmetic-coded and hierarchical/lossless (SOF3+)
+streams raise NotImplementedError naming the feature.
+`encode_jpeg_gray` produces spec-compliant single-component streams:
+the deterministic payloads the `exif_extract` query wraps in an EXIF
+APP1 segment and the MJPEG-AVI frames of functions/avi.py (any
+libjpeg-family tool can decode them).
 
-Performance shape (round 4): entropy decode is table-driven — the scan
-is pre-split on restart markers and unstuffed with vectorized numpy,
+Performance shape: entropy decode is table-driven — the scan is
+pre-split on restart markers and unstuffed with vectorized numpy,
 then each Huffman symbol costs ONE 65536-entry-LUT list indexing over
-a precomputed 32-bit sliding-window word list (~250x over the round-3
-per-bit tree walk on decode-heavy streams). All math — dequantization,
-the 2-D IDCT (one tensordot over every block at once), level shift,
-chroma upsampling, color conversion — is vectorized numpy over the
-whole image. Inside the engine this runs per Arrow batch in
-mapInPandas (operators/multimodal.py).
+a precomputed 32-bit sliding-window word list. Dequantization and the
+2-D IDCT (one einsum over every block at once) are vectorized numpy
+over the whole image.
 """
 
 from __future__ import annotations
@@ -128,13 +121,9 @@ def _huff_decoder(bits: list[int], vals: list[int]) -> tuple[list, list]:
 # ---------------------------------------------------------------------------
 
 
-def _entropy_segments(
-    payload: bytes, pos: int, return_end: bool = False
-) -> list[np.ndarray] | tuple[list[np.ndarray], int]:
+def _entropy_segments(payload: bytes, pos: int) -> list[np.ndarray]:
     """Split the entropy-coded data starting at `pos` into per-restart-
-    interval unstuffed byte arrays (vectorized marker scan). With
-    `return_end`, also return the absolute offset of the terminating
-    marker so a multi-scan (progressive) parse can resume there."""
+    interval unstuffed byte arrays (vectorized marker scan)."""
     data = np.frombuffer(payload, dtype=np.uint8)[pos:]
     ff = np.flatnonzero(data[:-1] == 0xFF)
     nxt = data[ff + 1]
@@ -156,8 +145,6 @@ def _entropy_segments(
                 keep[stuffed + 1] = False
                 seg = seg[keep]
         out.append(seg)
-    if return_end:
-        return out, pos + end
     return out
 
 
@@ -175,13 +162,6 @@ class _FastBits:
         w = (b[:-3] << 24) | (b[1:-2] << 16) | (b[2:-1] << 8) | b[3:]
         self.w = w.tolist()
         self.pos = 0
-
-
-def _extend(bits: int, size: int) -> int:
-    """JPEG F.2.2.1 EXTEND: map `size`-bit magnitude to signed value."""
-    if size == 0:
-        return 0
-    return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
 
 
 def _decode_block(fb: _FastBits, dc_tab, ac_tab, pred: int, zz: np.ndarray) -> int:
@@ -237,25 +217,19 @@ def _decode_block(fb: _FastBits, dc_tab, ac_tab, pred: int, zz: np.ndarray) -> i
 
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """JPEG -> uint8 array (H, W) for grayscale, (H, W, 3) RGB.
+    """Single-component baseline JPEG -> uint8 (H, W) array.
 
-    Supports SOF0/1 (baseline sequential Huffman, 8-bit) and SOF2
-    (progressive: spectral selection + successive approximation, EOB
-    runs, DC/AC refinement scans), 1- or 3-component scans, h/v
-    sampling factors up to 2 (4:4:4, 4:2:2, 4:2:0), DRI/RSTn restart
-    intervals. Hierarchical/lossless (SOF3+), arithmetic-coded
-    (SOF9+), and 12-bit streams raise NotImplementedError naming the
-    feature."""
+    Supports SOF0/1 (baseline sequential Huffman, 8-bit) with DRI/RSTn
+    restart intervals. Colour (more than one component), progressive
+    (SOF2), hierarchical/lossless (SOF3+), arithmetic-coded (SOF9+)
+    and 12-bit streams raise NotImplementedError naming the feature."""
     if len(payload) < 4 or payload[0] != 0xFF or payload[1] != 0xD8:
         raise ValueError("not a JPEG payload (missing SOI)")
     quant: dict[int, np.ndarray] = {}
-    dc_tabs: dict[int, dict] = {}
-    ac_tabs: dict[int, dict] = {}
-    frame = None  # (h, w, comps) with comps = [(cid, hs, vs, tq)]
+    dc_tabs: dict[int, tuple] = {}
+    ac_tabs: dict[int, tuple] = {}
+    frame = None  # (h, w, tq)
     restart_interval = 0
-    progressive = False
-    prog_store: dict[int, np.ndarray] = {}
-    prog_preds: dict[int, int] = {}
     i = 2
     while i < len(payload):
         if payload[i] != 0xFF:
@@ -287,29 +261,16 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 vals = list(seg[j + 17 : j + 17 + n])
                 (dc_tabs if tc == 0 else ac_tabs)[th] = _huff_decoder(bits, vals)
                 j += 17 + n
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 progressive
+        elif marker in (0xC0, 0xC1):  # SOF0/1 baseline
             if seg[0] != 8:
                 raise NotImplementedError("only 8-bit precision supported")
+            if seg[5] != 1:
+                raise NotImplementedError(f"{seg[5]}-component (colour) JPEG")
             h = int.from_bytes(seg[1:3], "big")
             w = int.from_bytes(seg[3:5], "big")
-            ncomp = seg[5]
-            comps = []
-            for c in range(ncomp):
-                cid = seg[6 + c * 3]
-                hs, vs = seg[7 + c * 3] >> 4, seg[7 + c * 3] & 0x0F
-                comps.append((cid, hs, vs, seg[8 + c * 3]))
-            frame = (h, w, comps)
-            progressive = marker == 0xC2
-            if progressive:
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mcux = -(-w // (8 * hmax))
-                mcuy = -(-h // (8 * vmax))
-                prog_store = {
-                    cid: np.zeros((mcuy * vs, mcux * hs, 64), dtype=np.int32)
-                    for cid, hs, vs, _tq in comps
-                }
-                prog_preds = {cid: 0 for cid, *_ in comps}
+            frame = (h, w, seg[8])
+        elif marker == 0xC2:
+            raise NotImplementedError("progressive JPEG (SOF2)")
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7):
             raise NotImplementedError("hierarchical/lossless JPEG (SOF3+)")
         elif 0xC8 <= marker <= 0xCF and marker != 0xCC:
@@ -319,284 +280,49 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         elif marker == 0xDA:  # SOS -> entropy-coded data follows
             if frame is None:
                 raise ValueError("SOS before SOF")
-            ns = seg[0]
-            scan = {}
-            scan_order = []
-            for c in range(ns):
-                scan[seg[1 + c * 2]] = (seg[2 + c * 2] >> 4, seg[2 + c * 2] & 0x0F)
-                scan_order.append(seg[1 + c * 2])
-            if not progressive:
-                return _decode_scan(
-                    payload, i + 2 + seg_len, frame, scan, quant,
-                    dc_tabs, ac_tabs, restart_interval,
-                )
-            ss, se = seg[1 + ns * 2], seg[2 + ns * 2]
-            a = seg[3 + ns * 2]
-            ah, al = a >> 4, a & 0x0F
-            i = _decode_prog_scan(
-                payload, i + 2 + seg_len, frame, scan, scan_order,
-                ss, se, ah, al, prog_store, prog_preds,
-                dc_tabs, ac_tabs, restart_interval,
+            tables = (dc_tabs[seg[2] >> 4], ac_tabs[seg[2] & 0x0F])
+            return _decode_scan(
+                payload, i + 2 + seg_len, frame, tables, quant,
+                restart_interval,
             )
-            continue
         i += 2 + seg_len
-    if progressive and frame is not None:
-        return _finish_frame(prog_store, frame, quant)
     raise ValueError("no SOS marker found")
 
 
 def _decode_scan(
-    payload, pos, frame, scan, quant, dc_tabs, ac_tabs, restart_interval
+    payload, pos, frame, tables, quant, restart_interval
 ) -> np.ndarray:
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # per-component zigzag coefficient store: (blocks_y, blocks_x, 64)
-    store = {}
-    for cid, hs, vs, _tq in comps:
-        store[cid] = np.zeros((mcuy * vs, mcux * hs, 64), dtype=np.int32)
-
+    """The one scan of a single-component baseline frame: Huffman
+    decode every block into a zigzag store, then dequantize + IDCT all
+    blocks at once."""
+    h, w, tq = frame
+    bh, bw = -(-h // 8), -(-w // 8)
+    store = np.zeros((bh, bw, 64), dtype=np.int32)
     segments = _entropy_segments(payload, pos)
     fb = _FastBits(segments[0])
     seg_idx = 0
-    pred = {cid: 0 for cid, *_ in comps}
-    mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                # predictors reset at each restart; the segment split
-                # already consumed the byte-aligned marker
-                seg_idx += 1
-                if seg_idx >= len(segments):
-                    raise ValueError("missing restart marker in scan")
-                fb = _FastBits(segments[seg_idx])
-                pred = {cid: 0 for cid in pred}
-            for cid, hs, vs, _tq in comps:
-                dct, act = scan[cid]
-                for by in range(vs):
-                    for bx in range(hs):
-                        zz = store[cid][my * vs + by, mx * hs + bx]
-                        pred[cid] = _decode_block(
-                            fb, dc_tabs[dct], ac_tabs[act], pred[cid], zz
-                        )
-            mcu += 1
+    pred = 0
+    for n in range(bh * bw):
+        if restart_interval and n and n % restart_interval == 0:
+            # the predictor resets at each restart; the segment split
+            # already consumed the byte-aligned marker
+            seg_idx += 1
+            if seg_idx >= len(segments):
+                raise ValueError("missing restart marker in scan")
+            fb = _FastBits(segments[seg_idx])
+            pred = 0
+        pred = _decode_block(fb, *tables, pred, store[n // bw, n % bw])
 
-    return _finish_frame(store, frame, quant)
-
-
-def _fb_bits(fb: _FastBits, n: int) -> int:
-    """Read n (1..16) raw bits MSB-first from the fast reader."""
-    j, o = divmod(fb.pos, 8)
-    v = ((fb.w[j] >> (16 - o)) & 0xFFFF) >> (16 - n)
-    fb.pos += n
-    return v
-
-
-def _fb_symbol(fb: _FastBits, tab) -> int:
-    sym_t, len_t = tab
-    j, o = divmod(fb.pos, 8)
-    peek = (fb.w[j] >> (16 - o)) & 0xFFFF
-    s = sym_t[peek]
-    if s < 0:
-        raise ValueError("invalid Huffman code in entropy segment")
-    fb.pos += len_t[peek]
-    return s
-
-
-def _decode_prog_scan(
-    payload, pos, frame, scan, scan_order, ss, se, ah, al,
-    store, preds, dc_tabs, ac_tabs, restart_interval,
-) -> int:
-    """Decode ONE progressive scan (ITU T.81 Annex G) into the shared
-    zigzag coefficient stores; returns the byte offset of the marker
-    that terminated the scan. Covers DC first/refinement (interleaved
-    or single-component), AC spectral-selection first scans with EOB
-    runs, and AC successive-approximation refinement (correction bits
-    for already-nonzero coefficients, run-coded newly-significant
-    ones) — the full baseline-process progressive feature set."""
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    comp_by_id = {c[0]: c for c in comps}
-    segments, end = _entropy_segments(payload, pos, return_end=True)
-    fb = _FastBits(segments[0])
-    seg_idx = 0
-    eobrun = 0
-    for cid in preds:
-        preds[cid] = 0
-
-    def restart():
-        nonlocal fb, seg_idx, eobrun
-        seg_idx += 1
-        if seg_idx >= len(segments):
-            raise ValueError("missing restart marker in progressive scan")
-        fb = _FastBits(segments[seg_idx])
-        eobrun = 0
-        for cid in preds:
-            preds[cid] = 0
-
-    if ss == 0:
-        # DC scan — se must be 0; interleaved over the scan components
-        if se != 0:
-            raise ValueError("DC progressive scan with Se != 0")
-        mcux = -(-w // (8 * hmax))
-        mcuy = -(-h // (8 * vmax))
-        single = len(scan_order) == 1
-        if single:
-            cid = scan_order[0]
-            _, hs, vs, _tq = comp_by_id[cid]
-            bw = -(-(-(-w * hs // hmax)) // 8)
-            bh = -(-(-(-h * vs // vmax)) // 8)
-            units = [(cid, by, bx) for by in range(bh) for bx in range(bw)]
-        else:
-            units = []
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    group = []
-                    for cid in scan_order:
-                        _, hs, vs, _tq = comp_by_id[cid]
-                        for by in range(vs):
-                            for bx in range(hs):
-                                group.append((cid, my * vs + by, mx * hs + bx))
-                    units.append(group)
-        n_units = len(units)
-        for u, unit in enumerate(units):
-            if restart_interval and u and u % restart_interval == 0:
-                restart()
-            blocks = [unit] if single else unit
-            for cid, by, bx in blocks:
-                zz = store[cid][by, bx]
-                if ah == 0:
-                    tab = dc_tabs[scan[cid][0]]
-                    size = _fb_symbol(fb, tab)
-                    if size:
-                        v = _fb_bits(fb, size)
-                        preds[cid] += _extend(v, size)
-                    zz[0] = preds[cid] << al
-                else:
-                    if _fb_bits(fb, 1):
-                        zz[0] |= 1 << al
-        del n_units
-        return end
-
-    # AC scan — always single-component, non-interleaved
-    if len(scan_order) != 1:
-        raise ValueError("interleaved AC progressive scan is invalid")
-    cid = scan_order[0]
-    _, hs, vs, _tq = comp_by_id[cid]
-    ac_tab = ac_tabs[scan[cid][1]]
-    bw = -(-(-(-w * hs // hmax)) // 8)
-    bh = -(-(-(-h * vs // vmax)) // 8)
-    p1 = 1 << al
-    m1 = -p1
-    blk = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and blk and blk % restart_interval == 0:
-                restart()
-            blk += 1
-            zz = store[cid][by, bx]
-            if ah == 0:  # spectral-selection first scan
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = _fb_symbol(fb, ac_tab)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r == 15:
-                            k += 16
-                            continue
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += _fb_bits(fb, r)
-                        break
-                    k += r
-                    if k > se:
-                        raise ValueError("AC run past end of band")
-                    v = _fb_bits(fb, s)
-                    zz[k] = _extend(v, s) << al
-                    k += 1
-                continue
-            # successive-approximation refinement scan
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = _fb_symbol(fb, ac_tab)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r != 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += _fb_bits(fb, r)
-                            break
-                        val = 0  # ZRL: skip 16 zero-history coefficients
-                    else:
-                        if s != 1:
-                            raise ValueError("bad refinement magnitude size")
-                        val = p1 if _fb_bits(fb, 1) else m1
-                    while k <= se:
-                        c = int(zz[k])
-                        if c != 0:
-                            if _fb_bits(fb, 1) and (c & p1) == 0:
-                                zz[k] = c + (p1 if c >= 0 else m1)
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if val and k <= se:
-                        zz[k] = val
-                    k += 1
-            if eobrun > 0:
-                while k <= se:
-                    c = int(zz[k])
-                    if c != 0:
-                        if _fb_bits(fb, 1) and (c & p1) == 0:
-                            zz[k] = c + (p1 if c >= 0 else m1)
-                    k += 1
-                eobrun -= 1
-    return end
-
-
-def _finish_frame(store, frame, quant) -> np.ndarray:
-    """Zigzag coefficient stores -> pixels: un-zigzag + dequantize +
-    IDCT every block at once, upsample chroma, color-convert."""
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    planes = {}
-    for cid, hs, vs, tq in comps:
-        zz = store[cid]
-        by, bx = zz.shape[:2]
-        blocks = np.zeros((by, bx, 64), dtype=np.float64)
-        blocks[:, :, ZIGZAG] = zz
-        blocks = blocks.reshape(by, bx, 8, 8) * quant[tq][None, None]
-        pix = np.einsum("ki,yxkl,lj->yxij", _C, blocks, _C, optimize=True)
-        pix = np.clip(np.round(pix) + 128.0, 0, 255).astype(np.uint8)
-        plane = pix.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
-        # replicate-upsample subsampled chroma to full resolution
-        plane = np.repeat(np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1)
-        planes[cid] = plane[:h, :w]
-
-    if len(comps) == 1:
-        return planes[comps[0][0]]
-    if len(comps) == 3:
-        y, cb, cr = (planes[c[0]].astype(np.float64) for c in comps)
-        r = y + 1.402 * (cr - 128.0)
-        g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-        b = y + 1.772 * (cb - 128.0)
-        return np.clip(np.round(np.stack([r, g, b], axis=2)), 0, 255).astype(
-            np.uint8
-        )
-    raise NotImplementedError(f"{len(comps)}-component JPEG")
+    blocks = np.zeros((bh, bw, 64), dtype=np.float64)
+    blocks[:, :, ZIGZAG] = store
+    blocks = blocks.reshape(bh, bw, 8, 8) * quant[tq][None, None]
+    pix = np.einsum("ki,yxkl,lj->yxij", _C, blocks, _C, optimize=True)
+    pix = np.clip(np.round(pix) + 128.0, 0, 255).astype(np.uint8)
+    return pix.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)[:h, :w]
 
 
 # ---------------------------------------------------------------------------
-# encoder (baseline, grayscale or RGB 4:4:4) — deterministic test payloads
+# encoder (baseline, grayscale) — deterministic test payloads
 # ---------------------------------------------------------------------------
 
 
@@ -635,8 +361,8 @@ def encode_jpeg_gray(
     """Single-component baseline JPEG of a (H, W) uint8 image with the
     Annex K luma Huffman tables. qtab=None uses an ALL-ONES quant table
     (near-lossless: only DCT/IDCT rounding), which makes constant-gray
-    blocks decode bit-exactly — the property the multimodal JPEG oracle
-    relies on; pass STD_LUMA_QUANT for a realistic lossy stream.
+    blocks decode bit-exactly; pass STD_LUMA_QUANT for a realistic
+    lossy stream.
     restart_interval > 0 emits DRI + RSTn markers every that many MCUs
     (exercises the decoder's restart path)."""
     if qtab is None:
@@ -744,350 +470,3 @@ def _plane_to_zigzag(plane: np.ndarray, qtab: np.ndarray, bh: int, bw_: int) -> 
     coefs = np.einsum("ik,yxkl,jl->yxij", _C, blocks, _C, optimize=True)
     q = np.round(coefs / qtab[None, None]).astype(np.int32)
     return q.reshape(bh, bw_, 64)[:, :, ZIGZAG]
-
-
-def rgb_to_ycbcr(img: np.ndarray) -> np.ndarray:
-    """JFIF BT.601 full-range RGB -> YCbCr (float64, same shape)."""
-    r, g, b = (img[..., i].astype(np.float64) for i in range(3))
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-    cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-    return np.stack([y, cb, cr], axis=2)
-
-
-def encode_jpeg_color(
-    img: np.ndarray,
-    subsampling: tuple[int, int] = (2, 2),
-    qtab_luma: np.ndarray | None = None,
-    qtab_chroma: np.ndarray | None = None,
-) -> bytes:
-    """3-component baseline JPEG of an (H, W, 3) uint8 RGB image.
-    subsampling=(2,2) is 4:2:0, (1,1) is 4:4:4. Huffman tables: the
-    Annex K luma pair for every component (spec-valid — the DHT
-    declares what the stream uses), so the decoder's interleaved-MCU /
-    subsampling / YCbCr paths are exercised without relying on a
-    second transcribed table set."""
-    if qtab_luma is None:
-        qtab_luma = np.ones((8, 8), dtype=np.int64)
-    if qtab_chroma is None:
-        qtab_chroma = qtab_luma
-    hs, vs = subsampling
-    img = np.asarray(img, dtype=np.uint8)
-    h, w, _ = img.shape
-    ycc = rgb_to_ycbcr(img)
-    y = np.clip(np.round(ycc[..., 0]), 0, 255)
-    # box-average chroma downsample (pad odd dims by edge replication)
-    cb, cr = ycc[..., 1], ycc[..., 2]
-    if (hs, vs) != (1, 1):
-        ph, pw = -(-h // vs) * vs, -(-w // hs) * hs
-        cb = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
-        cr = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
-        cb = cb.reshape(ph // vs, vs, pw // hs, hs).mean(axis=(1, 3))
-        cr = cr.reshape(ph // vs, vs, pw // hs, hs).mean(axis=(1, 3))
-    cb = np.clip(np.round(cb), 0, 255)
-    cr = np.clip(np.round(cr), 0, 255)
-
-    mcux = -(-w // (8 * hs))
-    mcuy = -(-h // (8 * vs))
-    yzz = _plane_to_zigzag(y, qtab_luma, mcuy * vs, mcux * hs)
-    cbzz = _plane_to_zigzag(cb, qtab_chroma, mcuy, mcux)
-    crzz = _plane_to_zigzag(cr, qtab_chroma, mcuy, mcux)
-
-    dc_codes = _huff_codes(DC_LUMA_BITS, DC_LUMA_VALS)
-    ac_codes = _huff_codes(AC_LUMA_BITS, AC_LUMA_VALS)
-    bw = _BitWriter()
-    pred = [0, 0, 0]
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for by in range(vs):
-                for bx in range(hs):
-                    pred[0] = _entropy_encode_blocks(
-                        bw, yzz[my * vs + by, mx * hs + bx], pred[0],
-                        dc_codes, ac_codes,
-                    )
-            pred[1] = _entropy_encode_blocks(
-                bw, cbzz[my, mx], pred[1], dc_codes, ac_codes
-            )
-            pred[2] = _entropy_encode_blocks(
-                bw, crzz[my, mx], pred[2], dc_codes, ac_codes
-            )
-    data = bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    q0 = qtab_luma.reshape(-1)[ZIGZAG].astype(np.uint8).tobytes()
-    q1 = qtab_chroma.reshape(-1)[ZIGZAG].astype(np.uint8).tobytes()
-    dht_dc = bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS)
-    dht_ac = bytes([0x10]) + bytes(AC_LUMA_BITS) + bytes(AC_LUMA_VALS)
-    sof = (
-        bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([3])
-        + bytes([1, (hs << 4) | vs, 0])
-        + bytes([2, 0x11, 1])
-        + bytes([3, 0x11, 1])
-    )
-    sos = bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0])
-    return (
-        b"\xff\xd8"
-        + seg(0xDB, bytes([0x00]) + q0)
-        + seg(0xDB, bytes([0x01]) + q1)
-        + seg(0xC0, sof)
-        + seg(0xC4, dht_dc)
-        + seg(0xC4, dht_ac)
-        + seg(0xDA, sos)
-        + data
-        + b"\xff\xd9"
-    )
-
-# ---------------------------------------------------------------------------
-# progressive encoder (SOF2) — deterministic test payloads exercising
-# every progressive decode path: DC first/refinement (interleaved and
-# single-component), AC spectral-selection first scans with EOB runs,
-# AC successive-approximation refinement with buffered correction bits
-# ---------------------------------------------------------------------------
-
-# near-flat canonical table covering ALL 256 symbols (2 at 8 bits +
-# 254 at 9 — a DHT length count is one byte, so 256-at-one-length is
-# unencodable): every EOBn/ZRL/run-size symbol a progressive scan can
-# emit is codable — simple and spec-legal, not compact
-FLAT9_BITS = [0] * 7 + [2] + [254] + [0] * 7
-FLAT9_VALS = list(range(256))
-
-
-class _ProgScanState:
-    """Scan-level EOB-run + buffered-correction-bit state (the jcphuff
-    bookkeeping): `eobrun` counts consecutive end-of-band blocks,
-    `pending` holds correction bits that must follow the next emitted
-    Huffman symbol."""
-
-    def __init__(self, bw: _BitWriter, ac_codes: dict):
-        self.bw = bw
-        self.ac = ac_codes
-        self.eobrun = 0
-        self.pending: list[int] = []
-
-    def dump_pending(self) -> None:
-        for b in self.pending:
-            self.bw.write(b, 1)
-        self.pending = []
-
-    def emit_sym(self, sym: int) -> None:
-        code, ln = self.ac[sym]
-        self.bw.write(code, ln)
-
-    def flush_eobrun(self) -> None:
-        if self.eobrun > 0:
-            r = self.eobrun.bit_length() - 1
-            self.emit_sym(r << 4)
-            if r:
-                self.bw.write(self.eobrun - (1 << r), r)
-            self.eobrun = 0
-        self.dump_pending()
-
-
-def _prog_ac_first_block(st: _ProgScanState, band_vals, se_rel: int) -> None:
-    """One block of an AC spectral-selection first scan. `band_vals` =
-    point-transformed coefficients for positions ss..se."""
-    sig = [i for i, v in enumerate(band_vals) if v]
-    if not sig:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush_eobrun()
-        return
-    st.flush_eobrun()
-    r = 0
-    for i in range(sig[-1] + 1):
-        v = int(band_vals[i])
-        if v == 0:
-            r += 1
-            continue
-        while r > 15:
-            st.emit_sym(0xF0)
-            st.dump_pending()
-            r -= 16
-        s = _category(v)
-        st.emit_sym((r << 4) | s)
-        bits = v if v >= 0 else v + (1 << s) - 1
-        st.bw.write(bits, s)
-        st.dump_pending()
-        r = 0
-    if sig[-1] < se_rel:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush_eobrun()
-
-
-def _prog_ac_refine_block(st: _ProgScanState, band_coefs, al: int, se_rel: int) -> None:
-    """One block of an AC refinement scan (Ah = Al+1). `band_coefs` =
-    FULL-precision coefficients for positions ss..se."""
-    t = [abs(int(c)) >> al for c in band_coefs]
-    sig = [i for i, v in enumerate(t) if v == 1]
-    if not sig:
-        for i, v in enumerate(t):
-            if v > 1:
-                st.pending.append(v & 1)
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush_eobrun()
-        return
-    st.flush_eobrun()
-    r = 0
-    for i in range(sig[-1] + 1):
-        v = t[i]
-        if v == 0:
-            r += 1
-            continue
-        # Emit any owed ZRLs on arrival at ANY nonzero coefficient —
-        # BEFORE buffering its correction bit (T.81 G.1.2.3 order, as
-        # libjpeg's encode_mcu_AC_refine does): the decoder's ZRL walk
-        # consumes exactly 16 zero-HISTORY positions and reads the
-        # correction bits it passes, so a bit belonging to a
-        # coefficient beyond that span must ride with the NEXT symbol,
-        # not with this ZRL. Deferring the ZRL to the next newly-
-        # significant coefficient (the old shape) dumped such bits one
-        # symbol early and desynchronized the decoder's bit stream.
-        while r > 15:
-            st.emit_sym(0xF0)
-            st.dump_pending()
-            r -= 16
-        if v > 1:
-            st.pending.append(v & 1)
-            continue
-        st.emit_sym((r << 4) | 1)
-        st.bw.write(1 if band_coefs[i] > 0 else 0, 1)
-        st.dump_pending()
-        r = 0
-    tail_has_positions = sig[-1] < se_rel
-    for i in range(sig[-1] + 1, se_rel + 1):
-        if t[i] > 1:
-            st.pending.append(t[i] & 1)
-    if tail_has_positions:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush_eobrun()
-
-
-def encode_jpeg_progressive(
-    img: np.ndarray,
-    qtab: np.ndarray | None = None,
-    scans: list | None = None,
-    restart_interval: int = 0,
-) -> bytes:
-    """Progressive (SOF2) JPEG of a (H, W) grayscale or (H, W, 3) RGB
-    (4:4:4) uint8 image. Default scan script uses one bit of
-    successive approximation: interleaved DC first (Al=1), per-
-    component AC spectral bands 1-5 / 6-63 first (Al=1), DC
-    refinement, per-component AC refinements — every progressive
-    decode path in one stream. `scans`: explicit
-    (comp_indices, ss, se, ah, al) tuples override the script.
-    `restart_interval` > 0 emits DRI + per-scan RSTn markers every
-    that many MCUs (blocks for non-interleaved scans) — DC predictors
-    and EOB runs reset at each marker, exercising the decoder's
-    per-scan restart path."""
-    if qtab is None:
-        qtab = np.ones((8, 8), dtype=np.int64)
-    img = np.asarray(img, dtype=np.uint8)
-    color = img.ndim == 3
-    if color:
-        ycc = np.clip(np.round(rgb_to_ycbcr(img)), 0, 255).astype(np.uint8)
-        planes = [ycc[:, :, 0], ycc[:, :, 1], ycc[:, :, 2]]
-    else:
-        planes = [img]
-    nc = len(planes)
-    h, w = planes[0].shape
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    bh, bw_ = ph // 8, pw // 8
-    coef = []
-    for p in planes:
-        padded = np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-        coef.append(
-            _plane_to_zigzag(padded, qtab, bh, bw_).reshape(bh * bw_, 64)
-        )
-
-    if scans is None:
-        scans = [(list(range(nc)), 0, 0, 0, 1)]
-        for c in range(nc):
-            scans += [([c], 1, 5, 0, 1), ([c], 6, 63, 0, 1)]
-        scans.append((list(range(nc)), 0, 0, 1, 0))
-        for c in range(nc):
-            scans += [([c], 1, 5, 1, 0), ([c], 6, 63, 1, 0)]
-
-    dc_codes = _huff_codes(DC_LUMA_BITS, DC_LUMA_VALS)
-    ac_codes = _huff_codes(FLAT9_BITS, FLAT9_VALS)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + qtab.reshape(-1)[ZIGZAG].astype(np.uint8).tobytes())
-    comp_spec = b""
-    for c in range(nc):
-        comp_spec += bytes([c + 1, 0x11, 0])
-    out += seg(
-        0xC2,
-        bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-        + bytes([nc]) + comp_spec,
-    )
-    out += seg(0xC4, bytes([0x00]) + bytes(DC_LUMA_BITS) + bytes(DC_LUMA_VALS))
-    out += seg(0xC4, bytes([0x11]) + bytes(FLAT9_BITS) + bytes(FLAT9_VALS))
-    if restart_interval:
-        out += seg(0xDD, restart_interval.to_bytes(2, "big"))
-
-    for comp_idx, ss, se, ah, al in scans:
-        sos_body = bytes([len(comp_idx)])
-        for c in comp_idx:
-            sos_body += bytes([c + 1, 0x01])  # DC table 0, AC table 1
-        sos_body += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xDA, sos_body)
-        scan_parts: list[bytes] = []
-        bwr = _BitWriter()
-        st = _ProgScanState(bwr, ac_codes)
-        preds = {c: 0 for c in comp_idx}
-        rst = 0
-
-        def _restart():
-            nonlocal bwr, st, preds, rst
-            st.flush_eobrun()
-            scan_parts.append(bwr.flush())
-            scan_parts.append(bytes([0xFF, 0xD0 + rst % 8]))
-            rst += 1
-            bwr = _BitWriter()
-            st = _ProgScanState(bwr, ac_codes)
-            preds = {c: 0 for c in comp_idx}
-
-        if ss == 0:
-            for n in range(bh * bw_):
-                if restart_interval and n and n % restart_interval == 0:
-                    _restart()
-                for c in comp_idx:
-                    if ah == 0:
-                        v = int(coef[c][n, 0]) >> al
-                        diff = v - preds[c]
-                        preds[c] = v
-                        s = _category(diff)
-                        code, ln = dc_codes[s]
-                        bwr.write(code, ln)
-                        if s:
-                            bits = diff if diff >= 0 else diff + (1 << s) - 1
-                            bwr.write(bits, s)
-                    else:
-                        bwr.write((int(coef[c][n, 0]) >> al) & 1, 1)
-        else:
-            (c,) = comp_idx
-            se_rel = se - ss
-            for n in range(bh * bw_):
-                if restart_interval and n and n % restart_interval == 0:
-                    _restart()
-                band = coef[c][n, ss : se + 1]
-                if ah == 0:
-                    vals = [
-                        (abs(int(v)) >> al) * (1 if v >= 0 else -1) for v in band
-                    ]
-                    _prog_ac_first_block(st, vals, se_rel)
-                else:
-                    _prog_ac_refine_block(st, band, al, se_rel)
-            st.flush_eobrun()
-        scan_parts.append(bwr.flush())
-        out += b"".join(scan_parts)
-    out += b"\xff\xd9"
-    return bytes(out)

@@ -20,8 +20,8 @@ Implemented from the public box grammar:
     count from the run-length table), stsz (sample count / constant
     size)
 
-`build_mp4` is the in-repo test muxer (the same encoder-for-decoder
-pattern as functions/wav.py & friends): a deterministic single-track
+`build_mp4` is the in-repo test muxer (the encoder-for-decoder
+pattern): a deterministic single-track
 file with real ftyp/moov/mdat layout, so roundtrip tests and the
 multimodal oracle pin the parser against independently-constructed
 bytes.

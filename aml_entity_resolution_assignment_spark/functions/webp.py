@@ -3,9 +3,9 @@
 Closes most of the remaining WebP boundary: lossless WebP is a
 self-contained entropy-coded format (canonical prefix codes + LZ77 +
 color cache + four reversible transforms) that needs no codec
-library. Lossy WebP (VP8 intra frames: boolean arithmetic coding,
-DCT, loop filter) remains the marked boundary — decode_webp raises a
-clear error for 'VP8 ' chunks.
+library. Lossy WebP (VP8 frames: boolean arithmetic coding, DCT,
+loop filter) is not supported — decode_webp raises
+NotImplementedError for 'VP8 ' chunks.
 
 Decoder coverage (per the WebP Lossless Bitstream Specification):
 
@@ -645,11 +645,8 @@ def decode_vp8l(data: bytes) -> np.ndarray:
 
 
 def decode_webp(payload: bytes) -> np.ndarray:
-    """Decode a WebP container -> uint8 (h, w, 4) RGBA (VP8L) or
-    (h, w, 3) RGB (lossy VP8 key frames via functions/vp8.py: boolean
-    coder + intra prediction + iDCT/iWHT + loop filter; see vp8.py's
-    probability-table fidelity note). VP8 inter frames raise at the
-    marked boundary."""
+    """Decode a lossless WebP container -> uint8 (h, w, 4) RGBA.
+    Lossy 'VP8 ' chunks raise NotImplementedError."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a RIFF/WEBP payload")
     pos = 12
@@ -662,9 +659,10 @@ def decode_webp(payload: bytes) -> np.ndarray:
         if tag == b"VP8L":
             return decode_vp8l(body)
         if tag == b"VP8 ":
-            from .vp8 import decode_vp8, yuv_to_rgb
-
-            return yuv_to_rgb(*decode_vp8(body))
+            raise NotImplementedError(
+                "lossy WebP (VP8 chunk) is not supported; only lossless "
+                "VP8L decodes"
+            )
         pos += 8 + size + (size & 1)
     raise ValueError("WebP container has no VP8L/VP8 chunk")
 

@@ -30,10 +30,10 @@ from pyspark.sql import functions as F
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
-    """Precondition: `edges` is distinct and single-orientation (the
-    canonicalized input, or small-star output, which is down-oriented)
-    — so the union IS the distinct symmetric set and needs no extra
-    dedup shuffle per round."""
+    """Precondition: `edges` is single-orientation (the canonicalized
+    input, or small-star output, which is down-oriented) — so the union
+    adds no reverse duplicates and needs no dedup shuffle per round.
+    Duplicate edges pass through and are tolerated downstream."""
     return edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

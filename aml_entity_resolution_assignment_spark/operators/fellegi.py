@@ -59,6 +59,16 @@ def pattern_counts(pairs: DataFrame, fields: Sequence[str]) -> DataFrame:
     return pairs.select(*cols).groupBy(*fields).agg(F.count("*").alias("n"))
 
 
+def _observed_patterns(
+    pairs: DataFrame, fields: Sequence[str]
+) -> list[tuple[tuple[int, ...], int]]:
+    """pattern_counts collected to the driver (<= 2^k rows — an
+    aggregate-sized collect) as [(gamma_tuple, count), ...], the input
+    fs_em takes."""
+    rows = pattern_counts(pairs, fields).collect()
+    return [(tuple(int(r[f]) for f in fields), int(r["n"])) for r in rows]
+
+
 def fs_em(
     patterns: list[tuple[tuple[int, ...], int]],
     k: int,
@@ -115,6 +125,29 @@ def fs_em(
     return lam, m, u
 
 
+def _score_pattern(
+    g: Sequence[int], lam: float, m: Sequence[float], u: Sequence[float]
+) -> tuple[float, float]:
+    """(match_weight, posterior) of one agreement pattern under fitted
+    (lambda, m, u): the log2 weight sums log2(m/u) over agreeing fields
+    and log2((1-m)/(1-u)) over disagreeing ones; the posterior is
+    P(M | gamma). The one scoring arithmetic fellegi_sunter and
+    scored_pattern_counts share, so their outputs agree by
+    construction."""
+    wlog = 0.0
+    pm, pu = lam, 1.0 - lam
+    for j, gj in enumerate(g):
+        if gj:
+            wlog += math.log2(m[j] / u[j])
+            pm *= m[j]
+            pu *= u[j]
+        else:
+            wlog += math.log2((1.0 - m[j]) / (1.0 - u[j]))
+            pm *= 1.0 - m[j]
+            pu *= 1.0 - u[j]
+    return float(wlog), float(pm / (pm + pu))
+
+
 def fit_params(
     pairs: DataFrame,
     fields: Sequence[str],
@@ -123,8 +156,7 @@ def fit_params(
 ) -> tuple[float, list[float], list[float]]:
     """Run the one distributed pattern-count pass + driver EM and
     return the fitted (lambda, m, u)."""
-    rows = pattern_counts(pairs, fields).collect()
-    pats = [(tuple(int(r[f]) for f in fields), int(r["n"])) for r in rows]
+    pats = _observed_patterns(pairs, fields)
     return fs_em(pats, len(fields), iters=iters, init=init)
 
 
@@ -138,7 +170,7 @@ def scored_pattern_counts(
     """The pattern-level view of fellegi_sunter: ONE distributed
     pattern-count pass + driver EM, returning the <= 2^k OBSERVED
     patterns with their counts and the fitted per-pattern
-    match_weight/posterior — the same Python scoring arithmetic
+    match_weight/posterior — the same _score_pattern arithmetic
     fellegi_sunter broadcasts, with `n` attached.
 
     For consumers whose output is a pure aggregate of the scored pairs
@@ -148,25 +180,11 @@ def scored_pattern_counts(
     an aggregate-sized table (guide §2.3: aggregate before you
     shuffle). Integer-count aggregates over this table are
     bit-identical to aggregating the per-pair scored output."""
-    rows = pattern_counts(pairs, fields).collect()
-    pats = [(tuple(int(r[f]) for f in fields), int(r["n"])) for r in rows]
-    k = len(fields)
-    lam, m, u = fs_em(pats, k, iters=iters, init=init, fix_u=fix_u)
-    scored = []
-    for g, n in pats:
-        wlog = 0.0
-        pm, pu = lam, 1.0 - lam
-        for j in range(k):
-            if g[j]:
-                wlog += math.log2(m[j] / u[j])
-                pm *= m[j]
-                pu *= u[j]
-            else:
-                wlog += math.log2((1.0 - m[j]) / (1.0 - u[j]))
-                pm *= 1.0 - m[j]
-                pu *= 1.0 - u[j]
-        post = pm / (pm + pu)
-        scored.append(tuple(g) + (int(n), float(wlog), float(post)))
+    pats = _observed_patterns(pairs, fields)
+    lam, m, u = fs_em(pats, len(fields), iters=iters, init=init, fix_u=fix_u)
+    scored = [
+        tuple(g) + (int(n),) + _score_pattern(g, lam, m, u) for g, n in pats
+    ]
     schema = (
         ", ".join(f"{f} int" for f in fields)
         + ", n long, match_weight double, posterior double"
@@ -203,29 +221,11 @@ def fellegi_sunter(
         lam, m, u = params
         pats = [(g, 0) for g in itertools.product((0, 1), repeat=k)]
     else:
-        pat_df = pattern_counts(pairs, fields)
-        rows = pat_df.collect()  # <= 2^k rows — aggregate-sized collect
-        pats = [
-            (tuple(int(r[f]) for f in fields), int(r["n"])) for r in rows
-        ]
+        pats = _observed_patterns(pairs, fields)
         lam, m, u = fs_em(pats, k, iters=iters, init=init, fix_u=fix_u)
 
     # score each observed pattern once, broadcast-join back by pattern
-    scored = []
-    for g, _n in pats:
-        wlog = 0.0
-        pm, pu = lam, 1.0 - lam
-        for j in range(k):
-            if g[j]:
-                wlog += math.log2(m[j] / u[j])
-                pm *= m[j]
-                pu *= u[j]
-            else:
-                wlog += math.log2((1.0 - m[j]) / (1.0 - u[j]))
-                pm *= 1.0 - m[j]
-                pu *= 1.0 - u[j]
-        post = pm / (pm + pu)
-        scored.append(tuple(g) + (float(wlog), float(post)))
+    scored = [tuple(g) + _score_pattern(g, lam, m, u) for g, _n in pats]
     spark = pairs.sparkSession
     schema = (
         ", ".join(f"{f} int" for f in fields)

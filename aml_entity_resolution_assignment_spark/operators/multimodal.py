@@ -3,21 +3,15 @@
 Image/audio/video are opaque `binary` columns with a metadata struct;
 decode / feature-extract / resize / frame-sample run as Arrow-batched
 mapInPandas stages. Decode is REAL in pure numpy for netpbm (P5/P6),
-baseline JPEG (functions/jpeg.py), PNG incl. Adam7/16-bit AND
-animated APNG with dispose/blend compositing (functions/png.py —
-round 5), GIF incl. animation (functions/gif.py), WebP
-lossless VP8L (functions/webp.py) and lossy VP8 key frames
-(functions/vp8.py), baseline AND progressive JPEG
-(functions/jpeg.py), TIFF (functions/tiff.py), BMP + ICO
-(functions/bmp.py), WAV audio incl. G.711/ADPCM (functions/wav.py),
-FLAC compressed audio (functions/flac.py: Rice partitions, fixed+LPC
-predictors, all stereo decorrelations, CRCs — round 5),
-MJPEG-AVI video (functions/avi.py), and VP8 INTER frames
-in IVF sequences (functions/vp8.py: motion compensation against
-last/golden/altref reference buffers, incl. SPLITMV per-subblock
-motion — round 5); the remaining psychoacoustic codecs
-(MP3/AAC/H.264/VP9/...) need codec libraries absent from this
-container and raise at a clearly-marked boundary. The Spark-side plumbing — schema, batch
+single-component baseline JPEG (functions/jpeg.py), PNG incl.
+Adam7/16-bit AND animated APNG with dispose/blend compositing
+(functions/png.py), GIF incl. animation (functions/gif.py), lossless
+WebP (VP8L, functions/webp.py), BMP + ICO (functions/bmp.py), QOI
+(functions/qoi.py), WAV audio incl. G.711/ADPCM (functions/wav.py),
+AIFF and Sun AU audio (functions/aiff.py), and MJPEG-AVI video
+(functions/avi.py). Every other payload (colour or progressive JPEG,
+lossy WebP, TIFF, FLAC, VP8/IVF, MP3/AAC/H.264/...) raises at a
+clearly-marked boundary. The Spark-side plumbing — schema, batch
 shape, partition-size control, null propagation — is real and tested
 for every kind.
 
@@ -106,18 +100,12 @@ def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 
 
 def _decode_image(payload: bytes) -> np.ndarray:
-    """Decode an image payload. Netpbm (P5/P6), baseline JPEG
-    (functions/jpeg.py: marker parse, Huffman entropy decode,
-    vectorized IDCT, 4:2:0/4:2:2/4:4:4, restart markers) and PNG
-    (functions/png.py: chunk walk + CRC, DEFLATE via stdlib zlib, all
-    five scanline filters, gray/RGB/palette/alpha) decode FOR REAL in
-    pure numpy (incl. Adam7 interlace), as do GIF (LZW) and WebP
-    lossless (full VP8L) AND lossy VP8 key frames (functions/vp8.py:
-    boolean coder + intra prediction + iDCT/iWHT); JPEG covers
-    baseline AND progressive (SOF2) since round 4, and VP8 INTER
-    frames decode in IVF sequences since round 5 (video path). The
-    remaining frontier — H.264/VP9, MP3/AAC — raises at a
-    clearly-marked boundary."""
+    """Decode an image payload. Netpbm (P5/P6), single-component
+    baseline JPEG (functions/jpeg.py), PNG (functions/png.py: chunk
+    walk + CRC, DEFLATE via stdlib zlib, all five scanline filters,
+    gray/RGB/palette/alpha, Adam7 interlace), GIF (LZW), lossless WebP
+    (VP8L), BMP, ICO and QOI decode FOR REAL in pure numpy; every
+    other format raises at a clearly-marked boundary."""
     if payload and payload[:1] == b"P" and payload[1:2] in (b"5", b"6"):
         return decode_netpbm(payload)
     if payload and payload[:2] == b"\xff\xd8":
@@ -140,10 +128,6 @@ def _decode_image(payload: bytes) -> np.ndarray:
         from ..functions.bmp import decode_bmp
 
         return decode_bmp(payload)
-    if payload and payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from ..functions.tiff import decode_tiff
-
-        return decode_tiff(payload)
     if payload and payload[:4] == b"\x00\x00\x01\x00":
         from ..functions.bmp import decode_ico
 
@@ -153,13 +137,10 @@ def _decode_image(payload: bytes) -> np.ndarray:
 
         return decode_qoi(payload)
     raise NotImplementedError(
-        "unsupported image payload: netpbm (P5/P6), JPEG (baseline + "
-        "progressive), PNG (incl. the APNG default image), GIF, WebP "
-        "(lossless VP8L + lossy VP8 key frames), TIFF, BMP, ICO and "
-        "QOI decode natively; VP8 inter frames decode on the video path "
-        "(decode_video_frames). The remaining frontier — H.264/VP9, "
-        "JPEG 2000/AVIF — needs codec libraries absent from this "
-        "container, or use extract_media_features("
+        "unsupported image payload: netpbm (P5/P6), single-component "
+        "baseline JPEG, PNG (incl. the APNG default image), GIF, "
+        "lossless WebP (VP8L), BMP, ICO and QOI decode natively; for "
+        "anything else use extract_media_features("
         "deterministic_fake=True)"
     )
 
@@ -194,22 +175,16 @@ def _image_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
 
 
 def _audio_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Real audio feature: WAV/PCM (functions/wav.py), FLAC
-    (functions/flac.py), AIFF, or Sun AU (functions/aiff.py) decode
-    by magic dispatch, pure struct + numpy ->
-    RMS/peak/ZCR/centroid + FFT bands, padded or truncated to the
-    fixed feature width. FLAC samples normalize by 2^(bps-1) to the
-    same [-1, 1] convention decode_wav uses."""
+    """Real audio feature: WAV/PCM (functions/wav.py), AIFF, or Sun AU
+    (functions/aiff.py) decode by magic dispatch, pure struct + numpy
+    -> RMS/peak/ZCR/centroid + FFT bands, padded or truncated to the
+    fixed feature width. AIFF/AU samples normalize by 2^(bits-1) to
+    the same [-1, 1] convention decode_wav uses."""
     from ..functions.wav import audio_features, decode_wav
 
     if payload is None or len(payload) == 0:
         return np.zeros(dim, dtype=np.float32)
-    if payload[:4] == b"fLaC":
-        from ..functions.flac import decode_flac
-
-        raw, _rate, bps = decode_flac(payload)
-        samples = raw.astype(np.float64) / float(1 << (bps - 1))
-    elif payload[:4] == b"FORM":
+    if payload[:4] == b"FORM":
         from ..functions.aiff import decode_aiff
 
         raw, _rate, bits = decode_aiff(payload)
@@ -230,13 +205,9 @@ def _audio_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
 def decode_video_frames(payload: bytes) -> np.ndarray:
     """Decode a video payload to a (n, h, w[, c]) uint8 frame stack.
     Real formats: MJPEG-AVI (functions/avi.py), animated GIF
-    (functions/gif.py), animated PNG (functions/png.py:decode_apng —
-    fcTL dispose/blend compositing, RGBA frames), and VP8-in-IVF with
-    true INTER frames (functions/vp8.py: motion-vector entropy
-    decode, near-MV survey, last/golden/altref reference buffers,
-    quarter/eighth-pel six-tap motion compensation). IVF returns the
-    luma plane per frame (gray). H.264/VP9/AV1 remain the marked
-    boundary."""
+    (functions/gif.py) and animated PNG (functions/png.py:decode_apng —
+    fcTL dispose/blend compositing, RGBA frames). Other containers
+    raise ValueError."""
     if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
         from ..functions.avi import decode_mjpeg_avi
 
@@ -249,21 +220,15 @@ def decode_video_frames(payload: bytes) -> np.ndarray:
         from ..functions.png import decode_apng
 
         return decode_apng(payload)[0]
-    if payload[:4] == b"DKIF":
-        from ..functions.vp8 import decode_ivf
-
-        planes, _fps = decode_ivf(payload)
-        return np.stack([y for (y, _u, _v) in planes])
     raise ValueError(
-        "video decode supports MJPEG-AVI, animated GIF, animated PNG, "
-        "and VP8-in-IVF (key + inter frames); H.264/VP9/AV1 need "
-        "libraries absent from this container"
+        "video decode supports MJPEG-AVI, animated GIF and animated "
+        "PNG; VP8-in-IVF and H.264/VP9/AV1 are not supported"
     )
 
 
 def _video_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     """Real video feature: frame-stack decode (MJPEG-AVI, animated
-    GIF, or VP8-in-IVF) -> per-frame gray mean in [0, 1] for up to dim
+    GIF or animated PNG) -> per-frame gray mean in [0, 1] for up to dim
     frames. A stand-in for a per-frame embedding with the same
     fixed-width contract."""
     if payload is None or len(payload) == 0:
@@ -284,11 +249,11 @@ def extract_media_features(
 
     mapInPandas so each Arrow batch is one vectorized pass; payloads are
     dropped from the output (never re-shuffle binary). With
-    deterministic_fake=False, image rows with netpbm/JPEG/PNG/GIF
-    payloads, audio rows with WAV or FLAC payloads, and video rows with
-    MJPEG-AVI or VP8-in-IVF payloads decode FOR REAL; other compressed
-    formats fall back to the byte-histogram feature (codec libs absent
-    here)."""
+    deterministic_fake=False, image rows with netpbm/JPEG/PNG/GIF/
+    WebP/BMP/ICO/QOI payloads, audio rows with WAV payloads, and video
+    rows with MJPEG-AVI, animated GIF or animated PNG payloads decode
+    FOR REAL; other payloads fall back to the byte-histogram
+    feature."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -308,7 +273,6 @@ def extract_media_features(
                             and payload[8:12] == b"WEBP"
                         )
                         or payload[:2] == b"BM"
-                        or payload[:4] in (b"II*\x00", b"MM\x00*")
                         or payload[:4] == b"\x00\x00\x01\x00"
                         or payload[:4] == b"qoif"
                     )
@@ -318,7 +282,7 @@ def extract_media_features(
                     not deterministic_fake
                     and kind == "audio"
                     and payload
-                    and payload[:4] in (b"RIFF", b"fLaC")
+                    and payload[:4] == b"RIFF"
                 ):
                     feats.append(_audio_feature(payload, dim))
                 elif (
@@ -328,7 +292,6 @@ def extract_media_features(
                     and (
                         (payload[:4] == b"RIFF" and payload[8:12] == b"AVI ")
                         or payload[:4] == b"GIF8"
-                        or payload[:4] == b"DKIF"
                         or payload[:8] == b"\x89PNG\r\n\x1a\n"
                     )
                 ):

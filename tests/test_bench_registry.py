@@ -33,3 +33,30 @@ def test_registry_and_oracles_have_identical_keys():
     }
     assert ROWS_ONLY <= set(q)
     assert not (ROWS_ONLY & set(o))
+
+
+def test_every_query_body_is_reachable_from_the_registry():
+    """Every module-level q_* function is a registered query or is
+    called (directly or through helpers) by one — unregistered query
+    bodies are dead code that no oracle checks."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(entry))
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def callees(name):
+        return {
+            n.id for n in ast.walk(funcs[name])
+            if isinstance(n, ast.Name) and n.id in funcs
+        }
+
+    reached = set()
+    todo = [f.__name__ for f in entry.queries().values()]
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo.extend(callees(name) - reached)
+    dead = sorted(n for n in funcs if n.startswith("q_") and n not in reached)
+    assert not dead, f"q_* bodies unreachable from queries(): {dead}"

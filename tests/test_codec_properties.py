@@ -4,7 +4,7 @@ property is a strict equality roundtrip — the codecs are lossless
 (JPEG excluded: DCT quantization is lossy by design)."""
 
 import numpy as np
-from hypothesis import HealthCheck, example, given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from aml_entity_resolution_assignment_spark.functions.gif import (
@@ -150,98 +150,3 @@ def test_png_subbyte_roundtrip(h, w, depth, ftype, interlace, palette, seed):
     )
     want = pal[s] if palette else s * (255 // ((1 << depth) - 1))
     np.testing.assert_array_equal(out, want)
-
-
-@settings(**_common)
-@given(
-    h=st.integers(min_value=1, max_value=40),
-    w=st.integers(min_value=1, max_value=40),
-    qi=st.integers(min_value=0, max_value=127),
-    flevel=st.sampled_from([0, 10, 40]),
-    ftype=st.sampled_from([0, 1]),
-    seed=_seeds,
-)
-def test_vp8_decode_equals_encoder_reconstruction(h, w, qi, flevel, ftype, seed):
-    """VP8 is lossy, so the property is NOT source equality — it is
-    that the decoder reproduces the encoder's decoder-identical
-    reconstruction EXACTLY (integer pipeline, no tolerance)."""
-    from aml_entity_resolution_assignment_spark.functions.vp8 import (
-        decode_vp8,
-        encode_vp8,
-    )
-
-    rng = np.random.default_rng(seed)
-    y = rng.integers(0, 256, (h, w)).astype(np.uint8)
-    stream, rec = encode_vp8(y, qi=qi, filter_level=flevel, filter_type=ftype)
-    got = decode_vp8(stream)
-    for g, r in zip(got, rec):
-        np.testing.assert_array_equal(g, r)
-
-
-@settings(**_common)
-@given(
-    h=st.integers(min_value=1, max_value=32),
-    w=st.integers(min_value=1, max_value=32),
-    color=st.booleans(),
-    seed=_seeds,
-)
-# pinned: a ZRL whose 16-zero span is interleaved with an already-
-# significant (history > 1) coefficient — the refinement encoder used
-# to dump that coefficient's correction bit with the ZRL instead of
-# the next symbol, desynchronizing the decoder's bit stream
-@example(h=9, w=2, color=True, seed=17044)
-def test_progressive_jpeg_equals_baseline(h, w, color, seed):
-    """Progressive and baseline streams of the same image carry the
-    same quantized coefficients -> bit-identical decodes."""
-    from aml_entity_resolution_assignment_spark.functions.jpeg import (
-        decode_jpeg,
-        encode_jpeg_color,
-        encode_jpeg_gray,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(seed)
-    if color:
-        img = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
-        base = decode_jpeg(encode_jpeg_color(img, subsampling=(1, 1)))
-    else:
-        img = rng.integers(0, 256, (h, w)).astype(np.uint8)
-        base = decode_jpeg(encode_jpeg_gray(img))
-    prog = decode_jpeg(encode_jpeg_progressive(img))
-    np.testing.assert_array_equal(base, prog)
-
-
-@settings(**_common)
-@given(
-    n=st.integers(min_value=1, max_value=700),
-    ch=st.sampled_from([1, 2]),
-    bps=st.sampled_from([8, 16]),
-    block=st.sampled_from([64, 192, 256]),
-    mode=st.sampled_from(
-        ["verbatim", "fixed0", "fixed1", "fixed2", "fixed3", "fixed4",
-         "lpc2", "lpc6"]
-    ),
-    stereo=st.sampled_from(
-        ["independent", "left_side", "right_side", "mid_side"]
-    ),
-    porder=st.sampled_from([0, 1]),
-    seed=_seeds,
-)
-def test_flac_roundtrip(n, ch, bps, block, mode, stereo, porder, seed):
-    from aml_entity_resolution_assignment_spark.functions.flac import (
-        decode_flac,
-        encode_flac,
-    )
-
-    # no guards: the encoder must downgrade order/partitioning itself
-    # on short/odd blocks (that's the property under test)
-    rng = np.random.default_rng(seed)
-    lim = 1 << (bps - 1)
-    x = rng.integers(-lim, lim, (n, ch)).astype(np.int64)
-    enc = encode_flac(
-        x, rate=8000, bps=bps, block_size=block, mode=mode,
-        stereo=stereo if ch == 2 else "independent", porder=porder,
-    )
-    dec, rate, got_bps = decode_flac(enc)
-    assert rate == 8000 and got_bps == bps
-    np.testing.assert_array_equal(dec, x.astype(np.int32))

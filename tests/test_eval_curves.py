@@ -44,6 +44,20 @@ def test_pr_curve_no_positives(spark):
     assert all(r.recall == 0.0 and r.f1 == 0.0 for r in rows)
 
 
+def test_pr_curve_null_weight_fails_loudly(spark):
+    """A NULL weight in the aggregate form must fail the query, not
+    silently drop the pairs its row stands for."""
+    agg = spark.createDataFrame(
+        [(0.9, 1, 2), (0.9, 0, 1), (0.2, 1, None)],
+        "posterior double, is_match int, n long",
+    )
+    with pytest.raises(Exception, match="NULL n weight"):
+        pr_curve(agg, weight_col="n").collect()
+    ok = agg.fillna({"n": 1})
+    out = {r.threshold: r for r in pr_curve(ok, weight_col="n").collect()}
+    assert (out[0.2].pred_pairs, out[0.2].tp) == (4, 3)
+
+
 def test_calibration_bins_and_ece(spark):
     out = {r.bin: r for r in calibration_bins(_scored(spark)).collect()}
     assert set(out) == {9, 2}

@@ -251,32 +251,11 @@ class TestMetaPrefix:
 
 
 class TestBoundary:
-    def test_lossy_vp8_now_decodes_boundary_is_inter_frames(self):
-        # round 4: lossy VP8 key frames decode for real (functions/
-        # vp8.py); the boundary moved to inter frames + truncation
+    def test_lossy_vp8_chunk_raises_not_implemented(self):
         riff = b"WEBP" + b"VP8 " + struct.pack("<I", 4) + b"\x00" * 4
         payload = b"RIFF" + struct.pack("<I", len(riff)) + riff
-        with pytest.raises(ValueError, match="truncated"):
-            decode_webp(payload)  # 4-byte chunk: not a whole key frame
-
-        import numpy as np
-
-        from aml_entity_resolution_assignment_spark.functions.vp8 import (
-            encode_webp_lossy,
-        )
-
-        y = np.full((16, 16), 200, dtype=np.uint8)
-        ok, rec = encode_webp_lossy(y, qi=0)
-        rgb = decode_webp(ok)
-        assert rgb.shape == (16, 16, 3)
-        # round 5: inter frames decode as SEQUENCES (functions/vp8.py
-        # decode_vp8_frame/decode_ivf); a bare inter frame inside a
-        # still-image WebP container has no reference buffers and is
-        # rejected with an actionable error
-        idx = ok.index(b"VP8 ") + 8
-        bad = ok[:idx] + bytes([ok[idx] | 1]) + ok[idx + 1 :]
-        with pytest.raises(ValueError, match="inter frame"):
-            decode_webp(bad)
+        with pytest.raises(NotImplementedError, match="lossy WebP"):
+            decode_webp(payload)
 
     def test_corrupt_rejected(self):
         payload = encode_webp(_rgba((8, 8), seed=30))

@@ -79,13 +79,6 @@ SECTIONS = [
         "with map-side partial combine; no UDF, no extra shuffle.",
     ),
     (
-        "multimodal_image",
-        "Multimodal decode: payload synthesis and codec decode both run "
-        "as Arrow-batched Python (ArrowEvalPython + MapInPandas, never "
-        "row-at-a-time BatchEvalPython); payloads are dropped before "
-        "any shuffle — only fixed-width features move.",
-    ),
-    (
         "decontaminate",
         "Decontamination: eval n-gram digests collapse to DISTINCT and "
         "broadcast (BroadcastHashJoin LeftSemi); the train side carries "
@@ -419,12 +412,6 @@ SECTIONS = [
         "partition; the recount is a broadcast hash join + "
         "map-side-combined count — the distinct-item space never "
         "shuffles.",
-    ),
-    (
-        "multimodal_image",
-        "Nine-codec image decode: encode + decode are Arrow batches "
-        "(ArrowEvalPython / FlatMapGroupsInPandas-free mapInPandas); "
-        "no BatchEvalPython row-at-a-time nodes anywhere.",
     ),
     (
         "adamic_adar",
